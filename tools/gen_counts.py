@@ -1,16 +1,29 @@
 #!/usr/bin/env python
-"""Stamp registry-derived counts into the prose docs (r11).
+"""Stamp registry-derived counts into the prose docs and regenerate
+COVERAGE_TABLE.md.
 
 VERDICT r10: SCALE.md said "114 queries" three hundred queries after
 that was true — hand-typed totals rot. This tool rewrites every
-`<!-- registry-count -->`-marked number from `len(QUERIES)`;
-tests/test_doc_counts.py asserts the docs agree with the registry, so
-the suite fails the moment prose and code diverge.
+`<!-- registry-count -->`-marked number from `len(QUERIES)` and
+rewrites COVERAGE_TABLE.md from `render_table()`;
+tests/test_doc_counts.py asserts both agree with the registry, so the
+suite fails the moment prose and code diverge.
 
 Marked pattern (the marker comment sits at the end of the line whose
 number is stamped):
 
     ... all 428 registry queries ... <!-- registry-count -->
+
+Each table row is anchored on its symbol, `operators/llm.py::ann_index_append`
+(the module's path under hbase_support_spark/ plus the function's
+qualname), not on a line number, so an edit elsewhere in a module no
+longer makes the table stale. The grade column reads the driver's
+CORRECTNESS_r*.json ledger (the newest file that sampled a query
+wins), so a commit that adds a ledger file must also run
+`python tools/gen_counts.py`.
+
+`python tools/gen_counts.py --check` writes nothing and exits 1 if any
+marked count or the table is stale.
 """
 
 from __future__ import annotations
@@ -57,13 +70,22 @@ def _last_grades() -> dict[str, tuple[str, str]]:
     return grades
 
 
-def render_table() -> str:
-    """VERDICT r11 item 8: the machine-generated per-query coverage
-    table (name -> module:line -> oracle kind -> last driver grade),
-    derived from the live registry + the driver's CORRECTNESS ledger
-    so coverage diffs are machine-checkable instead of prose."""
+def source_anchor(fn) -> str:
+    """`operators/llm.py::ann_index_append` for a registered query:
+    the defining module's path under hbase_support_spark/ and the
+    function's qualname (tests/test_doc_counts.py follows it back)."""
     import inspect
 
+    fn = inspect.unwrap(fn)
+    mod = fn.__module__.removeprefix("hbase_support_spark.")
+    return f"{mod.replace('.', '/')}.py::{fn.__qualname__}"
+
+
+def render_table() -> str:
+    """VERDICT r11 item 8: the machine-generated per-query coverage
+    table (name -> module.py::symbol -> oracle kind -> last driver
+    grade), derived from the live registry + the driver's CORRECTNESS
+    ledger so coverage diffs are machine-checkable instead of prose."""
     from hbase_support_spark import load_all
     from hbase_support_spark.registry import ORACLES, QUERIES
 
@@ -74,23 +96,22 @@ def render_table() -> str:
         "",
         f"Regenerate with `python tools/gen_counts.py`; "
         f"tests/test_doc_counts.py fails if this file is stale. "
-        f"{len(QUERIES)} registry queries; 'last grade' is the most "
-        "recent driver CORRECTNESS verdict (sql-hash = full row-count"
-        " + schema + value-hash oracle; rows-only = weaker check).",
+        f"{len(QUERIES)} registry queries; 'source' is the defining "
+        "module under hbase_support_spark/ and the function's name; "
+        "'last grade' is the most recent driver CORRECTNESS verdict "
+        "(sql-hash = full row-count + schema + value-hash oracle; "
+        "rows-only = weaker check).",
         "",
         "| query | source | oracle | last grade |",
         "|---|---|---|---|",
     ]
     for name in sorted(QUERIES):
-        fn = QUERIES[name]
-        mod = fn.__module__.replace("hbase_support_spark.", "")
-        try:
-            line = inspect.getsourcelines(inspect.unwrap(fn))[1]
-        except (OSError, TypeError):
-            line = 0
         okind = "sql-hash" if name in ORACLES else "rows-only"
         rnd, status = grades.get(name, ("-", "ungraded"))
-        lines.append(f"| {name} | {mod}:{line} | {okind} | {rnd} {status} |")
+        lines.append(
+            f"| {name} | {source_anchor(QUERIES[name])} | {okind} "
+            f"| {rnd} {status} |"
+        )
     lines.append("")
     return "\n".join(lines)
 
