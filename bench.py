@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -80,6 +81,18 @@ def _cpu_cal() -> float:
         s += i
     assert s == 199999990000000
     return round(time.perf_counter() - t0, 3)
+
+
+def master_cpus(spark) -> int:
+    """Worker threads of the session's master: N of ``local[N]`` or
+    ``local[N,F]``, 1 for ``local``, the host's CPUs for ``local[*]``;
+    any other master reports Spark's default parallelism."""
+    master = spark.sparkContext.master
+    m = re.fullmatch(r"local(?:\[(\d+|\*)(?:,\d+)?\])?", master)
+    if m is None:
+        return spark.sparkContext.defaultParallelism
+    n = m.group(1)
+    return 1 if n is None else os.cpu_count() if n == "*" else int(n)
 
 
 def main() -> None:
@@ -155,11 +168,12 @@ def main() -> None:
                 "idle_wait_sec": idle_waited,
                 "cpu_cal_sec": cpu_cal,
                 "cpu_cal_triple": cpu_cal_triple,
-                # EFFECTIVE core count: the $SPARK_GRAFT_CPUS value the
-                # session master was built from (session.py), NOT
-                # os.cpu_count() — the driver's low-core scaling probe
-                # must see its env take effect (VERDICT r12 item 3).
-                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+                # EFFECTIVE core count: the N of the session's
+                # local[N] master (session.py builds it from
+                # $SPARK_GRAFT_CPUS), NOT os.cpu_count() — a low-core
+                # scaling run must see its env take effect
+                # (VERDICT r12 item 3).
+                "cpus": master_cpus(spark),
                 "master": spark.sparkContext.master,
                 "host_cpus": os.cpu_count(),
                 "method": "warm3_best_of_3",

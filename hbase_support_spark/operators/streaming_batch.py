@@ -1483,7 +1483,17 @@ def events_coactivity_topk(spark, sf_dir):
     the 8 g JVM at the ×32 census (r8, SCALE.md). A broadcast build
     side is the one shape AQE skew-split cannot rescue; sort-merge
     on the bin streams per-key groups (buffer = one hour's actives)
-    and stays skew-splittable."""
+    and stays skew-splittable.
+
+    r13 negative result (VERDICT r12 item 8): the in-row restatement —
+    groupBy(hr).collect_set(user_id), then expand each hour's ordered
+    pairs inside the row (the minhash members pattern) — was built
+    and A/B-measured. Value-identical (top-20 equal at x32) but 3x
+    slower: x32 noop best-of-3 17.54 s (this SMJ) vs 50.68 s
+    (in-row). One task per hour serializes the expansion that the
+    SMJ plus AQE skew-split parallelize, and the collect_set row is
+    the uncapped hot-hour buffer this docstring rejects above
+    (OPTIMIZATION_r13.md §5). The SMJ shape stands."""
     uh = (
         load_table(spark, sf_dir, "events")
         .select("user_id", F.date_trunc("hour", "ts").alias("hr"))

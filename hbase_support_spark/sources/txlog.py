@@ -16,6 +16,16 @@ Parquet + an atomic-exclusive publish — both available on any storage):
     never make a reader see a half-commit, because data files are
     written BEFORE the manifest and the manifest appears atomically
     (os.link of a temp file — fails EEXIST on a commit race).
+  * Each version's relation is resolved once per session: the
+    mergeSchema read of a file list starts a footer-scan Spark job,
+    so `_read_files` memoizes the resolved DataFrame on the file list
+    itself (a bounded LRU). The key needs no invalidation — every
+    commit writes a fresh `files/v{N}-{uuid}` directory with
+    mode("error"), so a tuple of paths always names the same bytes,
+    and `txlog_vacuum` deletes only files no kept manifest lists. The
+    first read after a commit still pays the inference once; repeat
+    Gets/Scans of that version, and the next MERGE's touched-file
+    scan of it, start no schema job.
   * MERGE rewrites only the files that actually contain matched keys
     (file-level COW): the touched-file set comes from one pruned
     input_file_name() scan semi-joined against the source keys;
@@ -34,9 +44,11 @@ area) whose oracle recomputes both versions from pure SQL.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -103,14 +115,58 @@ def _commit(table_dir: str, version: int, manifest: dict) -> None:
             os.unlink(tmp)
 
 
+# Bound on memoized file lists: a streaming sink commits once per
+# micro-batch, so an unbounded memo would grow with the stream.
+_READ_MEMO_SIZE = 16
+
+
+@functools.lru_cache(maxsize=_READ_MEMO_SIZE)
+def _resolve(spark: SparkSession, files: tuple[str, ...]) -> DataFrame:
+    return spark.read.option("mergeSchema", "true").parquet(*files)
+
+
 def _read_files(spark: SparkSession, files: list[str]) -> DataFrame:
     """Read a manifest's file list with mergeSchema — after a
     schema-widening merge the list mixes pre- and post-widening files,
     and a plain read would take an arbitrary file's schema and silently
-    drop the widened column. EVERY internal read over manifest file
-    lists (merge survivors, delete rewrite, compact, touched-file scan,
-    stats) must come through here, matching txlog_read."""
-    return spark.read.option("mergeSchema", "true").parquet(*files)
+    drop the widened column. EVERY read over manifest file lists
+    (txlog_read, merge survivors, delete rewrite, compact, touched-file
+    scan, stats, scan, CDC) comes through here.
+
+    The resolved relation is memoized on (session, file tuple), the
+    `io._TABLE_CACHE` precedent: mergeSchema always runs a Spark job
+    that reads every file's footer (30-60 ms on a 15k-row table, about
+    half a point Get), and pure plan reuse skips it. Data files are
+    immutable and vacuum only deletes files no kept manifest lists, so
+    an entry is never stale. The session object, not just the
+    application, is in the key: a foreachBatch clone session (AQE off)
+    and the outer session never share a plan. Repeated reads of a
+    version return the same DataFrame; alias both sides to self-join
+    it. Spark Connect has no sparkContext and skips the memo.
+
+    Negative A/B (kept out): also resolving each new version at commit
+    time, so the first read after a commit hits too. kv_mixed, 20 s,
+    seeds 5 and 6, 4 vCPUs: op_p50_ms fell further (120 and 116 ms
+    against 143 and 128 ms with the memo alone), but op_mean_ms (334
+    and 312 ms against 307 and 284) and op_cpu_ms (1028 and 938 ms
+    against 951 and 848) came out worse — every commit pays
+    inference, even for a version the same op's compaction supersedes
+    before anyone reads it."""
+    if not hasattr(spark, "sparkContext"):  # Spark Connect — skip memo
+        return _resolve.__wrapped__(spark, tuple(files))
+    return _resolve(spark, tuple(files))
+
+
+def _manifest_entries(files: list[str], rows) -> dict:
+    """Map each entry of the manifest list ``files`` to the row whose
+    ``_file`` (an input_file_name() value: ``file:///p`` or ``file:/p``
+    for the manifest's ``/p``, percent-encoded — a space reads ``%20``)
+    names it; entries no row names are absent."""
+    by_name = {
+        unquote(r["_file"].removeprefix("file://").removeprefix("file:")): r
+        for r in rows
+    }
+    return {f: by_name[f] for f in files if f in by_name}
 
 
 def txlog_init(df: DataFrame, table_dir: str) -> int:
@@ -127,16 +183,13 @@ def txlog_init(df: DataFrame, table_dir: str) -> int:
 def txlog_read(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
-    """Read a pinned version (time travel) or the latest."""
+    """Read a pinned version (time travel) or the latest. Repeat
+    reads of a version reuse its memoized relation (`_read_files`)."""
     versions = txlog_versions(table_dir)
     if not versions:
         raise FileNotFoundError(f"no txlog at {table_dir}")
     v = version if version is not None else versions[-1]
-    # mergeSchema: commits may widen the schema (see txlog_merge);
-    # files written before the widening lack the new columns
-    return spark.read.option("mergeSchema", "true").parquet(
-        *_read_manifest(table_dir, v)["files"]
-    )
+    return _read_files(spark, _read_manifest(table_dir, v)["files"])
 
 
 def txlog_history(table_dir: str) -> list[dict]:
@@ -166,8 +219,7 @@ def _touched_files(
         .distinct()
         .collect()
     )  # file list: metadata-scale driver round-trip, same as manifest IO
-    norm = {r["_file"].removeprefix("file://") for r in rows}
-    return sorted(f for f in files if f in norm or f"file:{f}" in norm)
+    return sorted(_manifest_entries(files, rows))
 
 
 def txlog_merge(
@@ -222,8 +274,7 @@ def txlog_delete(spark: SparkSession, table_dir: str, predicate: str) -> int:
         .distinct()
         .collect()
     )
-    norm = {r["_file"].removeprefix("file://") for r in hit}
-    touched = sorted(f for f in files if f in norm or f"file:{f}" in norm)
+    touched = sorted(_manifest_entries(files, hit))
     untouched = [f for f in files if f not in set(touched)]
     new_version = parent + 1
     new_files = (
@@ -316,11 +367,9 @@ def txlog_collect_stats(
         .agg(F.min(key).alias("lo"), F.max(key).alias("hi"))
         .collect()
     )  # one row per file — metadata-scale
-    by_file = {}
-    for r in rows:
-        f = r["_file"].removeprefix("file://")
-        f = f.removeprefix("file:")
-        by_file[f] = [r["lo"], r["hi"]]
+    by_file = {
+        f: [r["lo"], r["hi"]] for f, r in _manifest_entries(files, rows).items()
+    }
     new_version = parent + 1
     _commit(
         table_dir,

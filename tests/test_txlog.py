@@ -38,6 +38,7 @@ def test_init_read_roundtrip(spark, sf_dir, table):
 def test_merge_updates_inserts_and_time_travel(spark, sf_dir, table):
     orders = load_table(spark, sf_dir, "orders")
     n = orders.count()
+    v1_rows = sorted(txlog_read(spark, table).collect())  # memoizes v1
     delta = orders.filter(F.col("o_orderkey") % 10 == 0).withColumn(
         "o_totalprice", F.col("o_totalprice") + 1000.0
     )
@@ -60,6 +61,9 @@ def test_merge_updates_inserts_and_time_travel(spark, sf_dir, table):
     assert v1.agg(F.sum("o_totalprice")).collect()[0][0] == pytest.approx(
         orders.agg(F.sum("o_totalprice")).collect()[0][0], rel=1e-9
     )
+    # the commit is a new file list: it never hits v1's memo entry,
+    # and the v1 pin still returns exactly the pre-merge rows
+    assert sorted(v1.collect()) == v1_rows
 
 
 def test_merge_is_file_level_cow(spark, sf_dir, table):
@@ -142,13 +146,17 @@ def test_vacuum_keeps_recent_drops_old(spark, sf_dir, table):
     txlog_delete(spark, table, "o_orderkey % 2 = 0")  # v3
     v1_files = _read_manifest(table, 1)["files"]
     n_now = txlog_read(spark, table).count()
+    n_v2 = txlog_read(spark, table, version=2).count()  # memoized pre-vacuum
     out = txlog_vacuum(table, keep_versions=2)
     assert out["dropped_versions"] == [1]
     # v1's files were unreferenced by v2/v3 (compact rewrote them) -> gone
     assert all(not os.path.exists(f) for f in v1_files)
     assert txlog_versions(table) == [2, 3]
     assert txlog_read(spark, table).count() == n_now  # latest unaffected
-    assert txlog_read(spark, table, version=2).count()  # kept pin readable
+    # kept pin readable: its memo entry lists only files vacuum kept
+    assert txlog_read(spark, table, version=2).count() == n_v2
+    with pytest.raises(FileNotFoundError):  # dropped pin is gone
+        txlog_read(spark, table, version=1)
 
 
 def test_stats_commit_and_file_skipping_scan(spark, sf_dir, table):
@@ -357,3 +365,100 @@ def test_txlog_changes_preimages_carry_v1_values(spark, sf_dir, table):
     for k in want:
         assert pre[k] == want[k]
         assert post[k] == round(want[k] + 1000.0, 2)
+
+
+def _jobs_during(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (result, job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeat_read_of_a_version_starts_no_job(spark, table):
+    """The first read of a version resolves its schema (mergeSchema's
+    footer-scan job); a second read of the same version reuses the
+    memoized relation, starts no job, and returns the same rows."""
+    first, jobs_first = _jobs_during(
+        spark, "txlog-memo-first", lambda: txlog_read(spark, table)
+    )
+    second, jobs_second = _jobs_during(
+        spark, "txlog-memo-second", lambda: txlog_read(spark, table, version=1)
+    )
+    assert jobs_first >= 1
+    assert jobs_second == 0
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_memo_is_bounded_lru(spark, table):
+    from hbase_support_spark.sources.txlog import (
+        _READ_MEMO_SIZE,
+        _read_files,
+        _read_manifest,
+        _resolve,
+    )
+
+    files = _read_manifest(table, 1)["files"]
+    lists = [files[i : i + w] for w in (1, 2, 3) for i in range(len(files) - w + 1)]
+    assert len(lists) > _READ_MEMO_SIZE
+    for fl in lists:
+        _read_files(spark, fl)
+        assert _resolve.cache_info().currsize <= _READ_MEMO_SIZE
+    assert _resolve.cache_info().currsize == _READ_MEMO_SIZE
+    _, newest = _jobs_during(
+        spark, "txlog-memo-newest", lambda: _read_files(spark, lists[-1])
+    )
+    _, oldest = _jobs_during(
+        spark, "txlog-memo-oldest", lambda: _read_files(spark, lists[0])
+    )
+    assert newest == 0  # still memoized
+    assert oldest >= 1  # evicted, resolved again
+
+
+def test_memo_is_per_session(spark, table):
+    """A relation resolved in one session is never handed to another
+    (a foreachBatch clone session runs with different confs)."""
+    mine = txlog_read(spark, table)
+    other = spark.newSession()
+    theirs = txlog_read(other, table)
+    assert mine.sparkSession is spark
+    assert theirs.sparkSession is other
+    assert theirs.count() == mine.count()
+
+
+def test_changes_between_versions_sharing_a_file_list(spark, table):
+    """A stats commit keeps its parent's file list, so both sides of
+    the CDC diff come from ONE memoized relation; the self-join must
+    still resolve and report no change."""
+    from hbase_support_spark.sources.txlog import txlog_changes, txlog_collect_stats
+
+    txlog_collect_stats(spark, table, "o_orderkey")
+    assert txlog_changes(spark, table, 1, 2, "o_orderkey").count() == 0
+    assert txlog_changes(
+        spark, table, 1, 2, "o_orderkey", preimages=True
+    ).count() == 0
+
+
+def test_file_matching_survives_uri_escaped_table_paths(spark, tmp_path):
+    """input_file_name() percent-encodes the path (a space reads %20):
+    MERGE, DELETE and stats must still find the files they touch in a
+    table dir whose name needs escaping, or a merge duplicates keys
+    and a delete silently keeps rows."""
+    from hbase_support_spark.sources.txlog import (
+        _read_manifest,
+        txlog_collect_stats,
+    )
+
+    d = str(tmp_path / "odd dir%20name" / "t")
+    base = spark.range(100).withColumnRenamed("id", "k")
+    txlog_init(base.repartitionByRange(4, "k"), d)
+    txlog_merge(spark, d, spark.range(5).withColumnRenamed("id", "k"), "k")
+    cur = txlog_read(spark, d)
+    assert cur.count() == cur.select("k").distinct().count() == 100
+    txlog_delete(spark, d, "k < 10")
+    assert txlog_read(spark, d).count() == 90
+    v = txlog_collect_stats(spark, d, "k")
+    assert all(b is not None for b in _read_manifest(d, v)["stats"].values())
