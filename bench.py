@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
 
@@ -81,18 +80,6 @@ def _cpu_cal() -> float:
         s += i
     assert s == 199999990000000
     return round(time.perf_counter() - t0, 3)
-
-
-def master_cpus(spark) -> int:
-    """Worker threads of the session's master: N of ``local[N]`` or
-    ``local[N,F]``, 1 for ``local``, the host's CPUs for ``local[*]``;
-    any other master reports Spark's default parallelism."""
-    master = spark.sparkContext.master
-    m = re.fullmatch(r"local(?:\[(\d+|\*)(?:,\d+)?\])?", master)
-    if m is None:
-        return spark.sparkContext.defaultParallelism
-    n = m.group(1)
-    return 1 if n is None else os.cpu_count() if n == "*" else int(n)
 
 
 def main() -> None:
@@ -168,12 +155,12 @@ def main() -> None:
                 "idle_wait_sec": idle_waited,
                 "cpu_cal_sec": cpu_cal,
                 "cpu_cal_triple": cpu_cal_triple,
-                # EFFECTIVE core count: the N of the session's
-                # local[N] master (session.py builds it from
-                # $SPARK_GRAFT_CPUS), NOT os.cpu_count() — a low-core
-                # scaling run must see its env take effect
-                # (VERDICT r12 item 3).
-                "cpus": master_cpus(spark),
+                # EFFECTIVE core count: the session's default
+                # parallelism, i.e. the N of the local[N] master
+                # session.py builds from $SPARK_GRAFT_CPUS, NOT
+                # os.cpu_count() — a low-core scaling run must see its
+                # env take effect (VERDICT r12 item 3).
+                "cpus": spark.sparkContext.defaultParallelism,
                 "master": spark.sparkContext.master,
                 "host_cpus": os.cpu_count(),
                 "method": "warm3_best_of_3",

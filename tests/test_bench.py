@@ -2,35 +2,10 @@
 
 from __future__ import annotations
 
-import os
-from types import SimpleNamespace
 
-import pytest
-
-import bench
-
-
-def _session(master: str):
-    return SimpleNamespace(
-        sparkContext=SimpleNamespace(master=master, defaultParallelism=7)
-    )
-
-
-@pytest.mark.parametrize(
-    "master, want",
-    [
-        ("local[4]", 4),
-        ("local[32]", 32),
-        ("local[3,2]", 3),
-        ("local", 1),
-        ("local[*]", os.cpu_count()),
-        ("spark://host:7077", 7),
-    ],
-)
-def test_master_cpus(master, want):
-    assert bench.master_cpus(_session(master)) == want
-
-
-def test_master_cpus_matches_live_session(spark):
+def test_cpus_field_matches_live_session_master(spark):
+    # bench.py's `cpus` is defaultParallelism, which is the N of a
+    # local[N] master as long as nothing sets spark.default.parallelism;
     # the test session is local[8] (conftest)
-    assert bench.master_cpus(spark) == 8
+    assert spark.sparkContext.master == "local[8]"
+    assert spark.sparkContext.defaultParallelism == 8
