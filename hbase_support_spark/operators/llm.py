@@ -6212,11 +6212,13 @@ def sim_centroid_classify(spark, sf_dir):
     import pandas as pd
 
     crows = sorted(cent.collect(), key=lambda r: r["cand_label"])
+    # embeddings are 64 wide by the fixture contract; the explicit
+    # width keeps an empty centroid table a (0, 64) matrix
     C = np.array([list(r["cvec"]) for r in crows], dtype="float64").reshape(
-        len(crows), -1
+        len(crows), 64
     )
     CLAB = np.array([r["cand_label"] for r in crows], dtype="int64")
-    NC = np.linalg.norm(C, axis=1) if len(crows) else np.zeros((0,))
+    NC = np.linalg.norm(C, axis=1)
     BAND = 2e-6
 
     out_schema = (
@@ -7135,7 +7137,13 @@ def embedding_pca_power_top1(spark, sf_dir):
     # power-of-two scaling.
     rows = mfr.collect()
     s_rows = {r["si_i"]: r["si"] for r in sfr.collect()}
-    n = nfr.collect()[0]["n"]
+    n_rows = nfr.collect()
+    if not n_rows:  # no embeddings: no component, like the oracle
+        return spark.createDataFrame(
+            [],
+            "dim int, component long, eigval_scaled double, explained_share double",
+        )
+    n = n_rows[0]["n"]
     C = {}
     for r in rows:
         C[(r["i"], r["j"])] = n * r["mij"] - s_rows[r["i"]] * s_rows[r["j"]]

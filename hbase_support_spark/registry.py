@@ -9,12 +9,17 @@ weaker rows-only check.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 
 QUERIES: dict[str, Callable] = {}
 ORACLES: dict[str, str] = {}
 
 _LOADED = False
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def register(name: str, oracle: str | None = None):
@@ -29,508 +34,45 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-# The driver grades queries in registration order with a bounded
-# 50-query window. Registration order is therefore a grading
-# schedule, not cosmetics: _reorder() puts un-green GRADING_PRIORITY
-# names first and everything with a green CORRECTNESS row last, so
-# green rows accumulate across rounds while each round's window is
-# spent only on never-green queries.
-#
-# This list is the COMPLETE schedule for every query never green
-# after round 2 (116 then; the round-3 build added ~44 more at the
-# tail), in blocks (three-round completion plan):
-#   round 3 (slots 1-50): the 19 kind-cast fixes + ADVICE-touched +
-#     judge-named high-value rows + one representative per remaining
-#     family — grading these pushes the union to ~144/254.
-#   round 4 (next 50): TPC-H variants and events analytics (per
-#     VERDICT r02 item 4), then remaining LLM-pipeline ops.
-#   rounds 5-6 (remainder): the round-5 block, then the round-3
-#     additions at the list tail (early additions first, the late
-#     ones — attribution/feature-store/txlog/etc. — last); after
-#     them every query has a driver verdict. Names already green
-#     simply drop out of the head via _reorder(), so the schedule
-#     self-heals if a round grades more or fewer than 50.
-#
-# Round-5 dry-run of the CLOSING window (VERDICT r04 item 4),
-# computed by simulating the staged r05 window green: the r06 head
-# is exactly the 37 remaining never-graded names, in order —
-#   1-21: agg_quantile_exact_global, sim_maxsim_multivector,
-#     layout_region_merge_plan, cells_major_compaction_view,
-#     events_feature_pit_join, events_attribution_linear,
-#     graph_triangle_count, pipeline_dataset_card, events_kstest_arms,
-#     win_max_drawdown, sim_ivf_recall_report,
-#     agg_percentile_exact_groups, table_expectations_report,
-#     events_power_analysis_mde, agg_bootstrap_ci_mean,
-#     sim_users_behavioral, win_time_weighted_avg,
-#     layout_bloom_point_lookup, events_mannwhitney_arms,
-#     agg_chisq_independence, pipeline_preference_pairs
-#   22-37: the round-4 additions (events_kaplan_meier ...
-#     events_retention_matrix).
-# Slots 38-50 of the r06 window are filled by the round-5 additions,
-# which are EXPLICITLY priority-listed in the "round-5 additions"
-# block at the end of this list (showpieces first, per that block's
-# own comment) — they no longer rely on the mid-group fallback;
-# additions beyond the first 13 roll into the r07 window.
-#
-# Round-7 dry-run of the r07 window (VERDICT r06 item 2; refreshed
-# 2026-08-15 with the registry FINAL at 424 — batches 20-21 landed
-# after the previous 412-count dry-run): cumulative driver verdicts
-# are 292 green / 0 red, leaving exactly 424 − 292 = 132 never-graded
-# names; the r07 window is the first 50 of them in registry order
-# (verified this session by instantiating queries() and diffing
-# against the union of CORRECTNESS_r01..r06.json greens) —
-#   1-25 (unchanged from the original dry-run): agg_bitmap_audience_overlap,
-#     events_rolling_uniques_bitmap, events_cep_3step, graph_bfs_hops,
-#     win_anchored_vwap, win_rolling_median_7, win_rolling_zscore,
-#     text_char_entropy, text_code_detect, text_readability_fk,
-#     agg_decay_weighted_ltv, agg_heavy_hitters_exact, events_wow_growth,
-#     events_day_completion_mask, events_cumulative_uniques,
-#     orders_backlog_aging, orders_cycle_time_stats, privacy_l_diversity,
-#     embedding_pca_power_top1, events_activity_deciles,
-#     supplier_sla_report, events_new_vs_returning_revenue,
-#     orders_repeat_purchase_curve, cells_family_stats, scan_multi_range
-#   26-50 (round-6 additions, import order; scans/cells-module ops —
-#   including the batch-15..21 tail appends — land before llm-module
-#   ones): layout_region_balance_plan, source_binaryfile_multimodal,
-#     source_csv_malformed_audit, layout_small_files_compaction_plan,
-#     scan_keyset_pagination, layout_meta_lookup,
-#     sample_neyman_allocation, layout_compaction_io_amplification,
-#     scan_fuzzy_rowkey, layout_region_split_policy_sim,
-#     layout_rpc_quota_throttle, scan_multiget_batch_plan,
-#     layout_region_normalizer_plan, layout_balancer_cost_model,
-#     source_parquet_schema_merge, layout_clustering_factor_audit,
-#     layout_autoscale_plan, sink_partition_pruning_audit,
-#     layout_block_index_lookup, sample_systematic_kth,
-#     cells_delete_marker_precedence, txlog_replay_gap_audit,
-#     cells_compaction_reclaim_preview, cells_version_gc_policy,
-#     wal_rollover_plan
-#   (vs the 412-count dry-run: the four batch-20/21 scans-module adds
-#   at slots 42-45 displace cells_column_pagination, snapshot_diff_asof,
-#   cells_mob_storage_plan, wal_replication_lag_report into r08 slot 1-4.)
-# The remaining 82 never-graded split exactly: 50 fill the r08 window
-# (cells_column_pagination ... text_bpe_merge_candidates — late cells/
-# txlog ops, stats/ops-analytics, the win_* technical-indicator block)
-# and the last 32 (late text/sim/pipeline/graph/fn batches,
-# text_ngram_novelty_rate ... fn_geo_quadkey) land in r09 slots 1-32;
-# with green r07+r08+r09, every registered query has a driver verdict
-# by r09-close, and r09 has 18 free slots for round-8+ additions.
-#
-# Round-8 refresh (registry FINAL at 428 — four r8 net-new ops, well
-# under the ≤18 freeze): the mid group orders by import, so
-# scan_salted_rowkey (scans module, early import) takes r08 slot 1
-# and displaces exactly one old-window name (text_bpe_merge_candidates,
-# old slot 50) into r09; the other three new ops (win_macd_signal /
-# graph_kcore_2step / fn_inet_cidr — late modules) land in the r09
-# window. Verified this session by instantiating queries() and
-# diffing against the union of CORRECTNESS_r01..r07.json greens
-# (342 green / 86 never-graded):
-#   r08 window (slots 1-50) = scan_salted_rowkey,
-#     cells_column_pagination, snapshot_diff_asof,
-#     cells_mob_storage_plan, wal_replication_lag_report,
-#     cells_put_if_absent_replay, scan_timerange_versions,
-#     cells_bulkload_hfile_plan, scan_raw_with_tombstones,
-#     cells_row_mutations_batch_audit, join_null_key_bypass,
-#     privacy_t_closeness, events_anova_f_oneway,
-#     events_sprt_sequential_test, events_srm_check,
-#     privacy_masking_view, pipeline_curriculum_order,
-#     orders_littles_law_audit, privacy_dp_sensitivity_report,
-#     agg_theta_sketch_users, events_ctr_wilson_rank,
-#     agg_hdr_histogram_p99, events_kendall_tau_campaigns,
-#     orders_skyline_customers, agg_simpson_diversity,
-#     orders_abc_xyz_matrix, events_autocorr_lag1,
-#     events_mann_kendall_trend, events_attribution_time_decay,
-#     agg_skewness_kurtosis, events_lead_lag_xcorr,
-#     events_burstiness_fano, orders_eoq_reorder_policy,
-#     orders_discount_elasticity_ols, events_interarrival_cv2,
-#     orders_price_volume_mix_bridge, events_changepoint_binseg,
-#     agg_weighted_median, events_ljung_box_q,
-#     events_seasonal_decompose, events_metric_definition_audit,
-#     win_ewma_dyadic, win_rolling_1h_time_frame,
-#     win_bollinger_breakout, win_parkinson_volatility,
-#     win_drawdown_duration, win_rsi_cutler,
-#     win_stochastic_oscillator, win_ulcer_index, win_obv_accumulation
-#   r09 window (the remaining 36; slots 1-36, 14 free) =
-#     win_macd_signal, text_bpe_merge_candidates,
-#     text_ngram_novelty_rate, pipeline_length_bucket_batching,
-#     embedding_binary_quantize_recall, sim_kmeans_assign_step,
-#     text_bpe_apply_merge, text_hashed_feature_vector,
-#     sim_knn_filtered_vs_postfilter, dedup_minhash_1bit_recall,
-#     text_watermark_greenlist_score, text_phrase_search_positional,
-#     text_tokenizer_fertility, sim_pq_adc_recall,
-#     pipeline_mix_temperature_shares, dedup_bloom_prefilter_audit,
-#     text_stopword_profile, pipeline_filter_ablation_grid,
-#     text_js_divergence_vs_corpus, text_heaps_law_fit,
-#     dedup_cluster_size_histogram, text_mattr_diversity,
-#     text_collocation_pmi, events_markov_entropy,
-#     multimodal_scene_cut_detect, multimodal_audio_vad_segments,
-#     graph_jaccard_nation_trade, graph_connected_components,
-#     graph_degree_assortativity, graph_hits_bipartite,
-#     graph_random_walk_deterministic, graph_kcore_2step,
-#     fn_url, fn_business_days, fn_geo_quadkey, fn_inet_cidr
-# — with green r08+r09, every registered query has a driver verdict
-# by r09-close (arithmetic: 428 = 342 green + 50 r08 + 36 r09).
-#
-# Round-9 refresh + the POST-CLOSURE plan (VERDICT r08 items 1 and 7).
-# r08 graded 50/50 green (cumulative 392); re-verified this session by
-# instantiating queries(): the r09 window head (slots 1-36) is exactly
-# the 36 never-graded names listed above, and slots 37-50 self-fill
-# with green-tail re-grades (scan_full ... layout_split_points — NB
-# slot 50 layout_split_points was restructured this round onto the
-# value grid; parity re-verified both SFs before staging). Registry
-# HELD at 428 (op freeze, r8 saturation lesson: difflib-match
-# sorted(QUERIES) before any add).
-#
-# What r10+ rounds are FOR once every query has a verdict (r09-close):
-# the window self-fills with green-tail re-grades in registration
-# order, which is the correct default — re-grading the oldest greens
-# guards against silent regression. Builder rounds then shift from
-# coverage to depth. STATUS AFTER THE LATE-r9 SESSION — items 1 and
-# 2 of the original plan are COMPLETE, do not redo them:
-#   1. Scale ledger: DONE two decades deep. Full ×128 census at
-#      HEAD is a repo artifact (CENSUS_x128_r9.txt, 408/408 clean);
-#      ×512 rows exist for every family that ever made a census
-#      top-10 (SCALE.md). Per-round maintenance = re-run the ×32
-#      census after plan-touching changes (the only instrument that
-#      has ever caught the JVM-killer class).
-#   2. Adversarial drills: DONE and green on every axis — regen
-#      (shape), shuffle (order), boundary (values/ROUND ties/-0.0),
-#      skew (hot keys), and the boundary×skew composite. Each drill
-#      caught real bugs at introduction (r9: cusum ROUND midpoint,
-#      Python-round UDAF, three lineitem window tie-spines); re-run
-#      the full set in pre-flight each round — cheap, and fixtures
-#      regenerate.
-#   3. Plan/parity-audit hardening (ONGOING): five static sweeps
-#      now — funnel, kernel-feeding, buffering-agg, round-tie
-#      (cross-engine ROUND divergence + structural terminating
-#      hazards, canaried emulation), fixture-contract (unique
-#      tie-break spines; lineitem documented non-unique). Keep
-#      canaries fresh against Spark upgrades; extend to new classes
-#      as drills/censuses find them.
-#   4. The 14 free r09 slots (and any post-closure slack) take
-#      genuinely-new §2-adjacent ops ONLY if a real gap surfaces;
-#      the freeze stays the default.
-#
-# R10 STATUS (first pure-maintenance round; registry HELD at 428):
-#   - Ritual executed in full: pre-edit sf0.01 parity 428/428, all
-#     NINE drills green at HEAD (the text drill joined the axis list
-#     in r9; kind+zero-sign re-run post-edit), pytest 3,054/0,
-#     post-edit sf0.01 parity 428/428, ×32 census 408/408 with zero
-#     JVM deaths (CENSUS_x32_r10.txt), PLANS.md regen = ZERO diff,
-#     bench 0.87× baseline with the identical-tree drift control
-#     (BENCH.md r10).
-#   - Closed all four r9 ADVICE items and generalized the cusum
-#     class into the registry-wide int64-headroom audit (15 queries
-#     → DECIMAL(38,0) moments; SCALE.md r10; whale-fixture stress +
-#     source pins in tests/test_headroom_audit.py). New static
-#     sweep: tests/test_python_round_sweep.py (AST ban on
-#     ties-to-even rounding in kernels — the audit-blind-spot
-#     ADVICE named). Sink scratch is now per-process
-#     (io.scratch_root; the r9 concurrent-sweep race is fixed, not
-#     just documented). Spark Connect smoke added, skip-guarded
-#     (tests/test_connect_smoke.py) with the no-sparkContext seam
-#     pinned.
-#   - sessionize_30m_full floor ADJUDICATED (BENCH.md r10): one
-#     exchange, zero SinglePartition, cost = per-user session
-#     sort/merge; scales out on user_id. Profiling item retired.
-# Names that must be re-graded even though they already have a green
-# CORRECTNESS row: the r12 window rotation dropped these two while the
-# ann write path changed in-window (VERDICT r12 item 2). _reorder()
-# treats them as un-green so they land at the very head of the window.
-FORCE_REGRADE: list[str] = [
-    "ann_index_append",
-    "filter_in_ranges",
-]
-
-GRADING_PRIORITY: list[str] = [
-    # ---- round-3 window, slots 1-19: the 19 kind-cast fixes (r02 FAILs first)
-    "sim_lsh_hyperplane",
-    "fn_date",
-    "fn_math",
-    "stream_session_30m",
-    "source_text_corpus",
-    "agg_grouping_sets",
-    "agg_conditional",
-    "agg_pivot",
-    "agg_entropy_behavior",
-    "embedding_quantize_int8",
-    "text_repetition_ratio",
-    "pipeline_mix_weighted",
-    "pipeline_pack_sequences",
-    "text_inverted_index",
-    "sample_stratified",
-    "pipeline_train_ready",
-    "pipeline_token_budget_plan",
-    "rollup_time_hierarchy",
-    "tpch_q12_priority_lines",
-    # ---- slots 20-24: ADVICE-r02-touched never-green
-    "join_er_numeric_banding",
-    "tpch_q11_important_parts",
-    "win_longest_streak",
-    "bulk_delete_predicate",
-    "merge_into_upsert",
-    # ---- slots 25-35: judge-named high-value never-graded rows
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "sim_knn_query",
-    "sim_knn_ivf",
-    "sim_knn_ivf_multiprobe",
-    "sim_pairs_threshold",
-    "text_tfidf_topterms",
-    "text_sentiment_lexicon",
-    "text_lang_profile",
-    "multimodal_join",
-    "agg_collect",
-    # ---- slots 36-50: family representatives (sources/layout/joins/aggs/events)
-    "source_orc_roundtrip",
-    "sample_hash_deterministic",
-    "layout_split_points",
-    "snapshot_point_in_time",
-    "index_point_lookup",
-    "layout_hotspot_report",
-    "scan_salted_table_roundtrip",
-    "layout_zorder_scan",
-    "as_of_join_forward",
-    "join_skew_salted",
-    "join_er_fuzzy_string",
-    "agg_corr_covar",
-    "events_funnel",
-    "agg_salted_two_phase",
-    "events_retention_daily",
-    # ---- round-4 block (next 50): TPC-H variants + events analytics + remaining LLM ops
-    "tpch_q4_exists",
-    "tpch_q6_forecast",
-    "tpch_q7_volume",
-    "tpch_q8_share",
-    "tpch_q10_returns",
-    "tpch_q13_distribution",
-    "tpch_q14_promo",
-    "tpch_q17_scalar_corr",
-    "tpch_q18_in_having",
-    "tpch_q22_anti_scalar",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q9_product_profit",
-    "tpch_q15_top_supplier",
-    "tpch_q16_supplier_counts",
-    "tpch_q19_bracket_revenue",
-    "tpch_q20_excess_suppliers",
-    "tpch_q21_waiting_supplier",
-    "events_rfm_segmentation",
-    "win_pattern_rising_runs",
-    "set_except_all",
-    "set_symmetric_diff",
-    "events_anomaly_zscore",
-    "click_to_purchase_1h",
-    "time_series_gap_fill",
-    "stream_topk_per_window",
-    "stream_windowed_distinct",
-    "events_markov_transitions",
-    "events_cusum_changepoint",
-    "events_seasonality_profile",
-    "events_cohort_ltv_curve",
-    "events_dau_wau",
-    "fn_unpivot",
-    "fn_content_uuid",
-    "agg_histogram_fixed_bins",
-    "table_profile_stats",
-    "agg_benford_first_digit",
-    "agg_gini_concentration",
-    "dedup_ngram_jaccard_fast",
-    "dedup_embedding_cosine",
-    "sim_knn_batch",
-    "sim_knn_ivf_persisted",
-    "sim_pairs_threshold_blas",
-    "text_bigram_counts",
-    "text_token_count_regex",
-    "text_scrub_pii",
-    "pipeline_clean_corpus",
-    "pipeline_decontaminate",
-    "embedding_norm_outliers",
-    "pipeline_epoch_order",
-    "dedup_incremental_vs_corpus",
-    "sim_knn_self_join",
-    # ---- round-5 block: remainder + the mandated-extension
-    #      showpieces pulled forward from the round-3 tail (VERDICT
-    #      r03 item 3: multimodal_*, winnow/substring dedup,
-    #      merge_into_txlog are the brief's named LLM-pipeline
-    #      deliverables — they must get a driver hash in round 5,
-    #      not round 6)
-    "text_boilerplate_phrases",
-    "text_quality_logit",
-    "sim_knn_self_join_blas",
-    "text_ngram_lm_perplexity",
-    "sample_importance_weighted",
-    "text_boilerplate_density",
-    "text_langid_confusion",
-    "dedup_lsh_recall_report",
-    "dedup_containment",
-    "sim_range_search",
-    "embedding_truncation_recall",
-    "text_zipf_fit",
-    "pipeline_dedup_cascade",
-    "sample_k_per_group",
-    "corpus_drift_psi",
-    "multimodal_frame_sample",
-    "dedup_substring_spans",
-    "multimodal_resize_thumb",
-    "multimodal_feature_extract",
-    "merge_into_txlog",
-    "text_winnow_fingerprint",
-    "dedup_winnow_pairs",
-    # ---- round-6 tail: remaining round-3 additions
-    "events_path_topk",
-    "stream_late_events_audit",
-    "as_of_join_nearest",
-    "join_bucketed_colocated",
-    "pipeline_shard_manifest",
-    "sample_negative_pairs",
-    "win_ohlc_bars",
-    "events_bot_cadence_score",
-    "agg_mode_deterministic",
-    "events_audience_overlap",
-    "events_time_to_convert_curve",
-    "agg_winsorized_mean",
-    "graph_pagerank_bipartite",
-    "basket_copurchase_lift",
-    "events_forecast_holt",
-    "events_abtest_ztest",
-    "events_peak_concurrency",
-    "events_ratio_metric_delta_ci",
-    "events_cuped_adjustment",
-    "events_forecast_backtest",
-    "events_session_bounce_rate",
-    "events_coactivity_topk",
-    "pipeline_chunk_sliding",
-    "events_attribution_last_touch",
-    "events_lifecycle_states",
-    "join_dim_scd2",
-    "agg_quantile_exact_global",
-    "sim_maxsim_multivector",
-    "layout_region_merge_plan",
-    "cells_major_compaction_view",
-    "events_feature_pit_join",
-    "events_attribution_linear",
-    "graph_triangle_count",
-    "pipeline_dataset_card",
-    "events_kstest_arms",
-    "win_max_drawdown",
-    "sim_ivf_recall_report",
-    "agg_percentile_exact_groups",
-    "table_expectations_report",
-    "events_power_analysis_mde",
-    "agg_bootstrap_ci_mean",
-    "sim_users_behavioral",
-    "win_time_weighted_avg",
-    "layout_bloom_point_lookup",
-    "events_mannwhitney_arms",
-    "agg_chisq_independence",
-    "pipeline_preference_pairs",
-    # ---- round-4 additions (tail: graded after everything above)
-    "events_kaplan_meier",
-    "dedup_semdedup_keep",
-    "events_logrank_test",
-    "sim_knn_int8_recall",
-    "text_source_vocab_overlap",
-    "multimodal_audio_energy",
-    "index_incremental_lookup",
-    "txlog_changes_feed",
-    "matview_incremental_refresh",
-    "agg_mad_robust_outliers",
-    "privacy_k_anonymity_lattice",
-    "events_funnel_24h",
-    "agg_pareto_abc",
-    "sim_rerank_rrf",
-    "text_keyphrase_rake",
-    "events_retention_matrix",
-    # ---- round-5 additions (graded after the r06 closing head above;
-    #      ~13 fit r06 slots 38-50, remainder opens the r07 window).
-    #      Ordered showpiece-first: multimodal/dedup/embedding bridge
-    #      ops, then experimentation/analytics, then the rest.
-    "multimodal_phash_near_dup",
-    "dedup_source_overlap_matrix",
-    "dedup_text_normalized",
-    "sim_centroid_classify",
-    "embedding_centroid_drift",
-    "multimodal_coverage_audit",
-    "multimodal_modality_mix_report",
-    "sample_train_test_split",
-    "pipeline_filter_funnel_report",
-    "text_vocab_coverage_oov",
-    "events_diff_in_diff",
-    "scd2_build_from_history",
-    "agg_bitmap_audience_overlap",
-    "events_rolling_uniques_bitmap",
-    "events_cep_3step",
-    "graph_bfs_hops",
-    "win_anchored_vwap",
-    "win_rolling_median_7",
-    "win_rolling_zscore",
-    "text_char_entropy",
-    "text_code_detect",
-    "text_readability_fk",
-    "agg_decay_weighted_ltv",
-    "agg_heavy_hitters_exact",
-    "events_wow_growth",
-    "events_day_completion_mask",
-    "events_cumulative_uniques",
-    "orders_backlog_aging",
-    "orders_cycle_time_stats",
-    "privacy_l_diversity",
-    "embedding_pca_power_top1",
-    "events_activity_deciles",
-    "supplier_sla_report",
-    "events_new_vs_returning_revenue",
-    "orders_repeat_purchase_curve",
-    "cells_family_stats",
-    "scan_multi_range",
-]
+# Each grading round takes the first 50 names in registration order,
+# so registration order is a grading schedule. _reorder() derives it from
+# the committed CORRECTNESS_r*.json ledger: a name ranks by the round
+# of its latest verdict if that verdict is green, and ranks 0 if it is
+# red or the name has no verdict. Lower ranks register first and ties
+# keep import order, so each window re-grades the stalest queries.
 
 
-def _graded_green() -> set[str]:
-    """Names with a green CORRECTNESS row in ANY committed round
-    (rows+schema+hash all true, no error) — read from the
-    CORRECTNESS_r*.json files at the repo root, so the grading
-    schedule maintains itself round over round. Missing or unreadable
-    files simply contribute nothing."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    green: set[str] = set()
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+def _graded_green(root: str = _ROOT) -> dict[str, int]:
+    """Name -> round of its latest verdict in ``root``'s
+    CORRECTNESS_rNN.json files if that verdict is green (rows, schema
+    and hash all match, no error), else 0. Unreadable files add
+    nothing."""
+    ledgers = []
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if m:
+            ledgers.append((int(m.group(1)), path))
+    ranks: dict[str, int] = {}
+    for rnd, path in sorted(ledgers):
         try:
             with open(path) as f:
                 rows = json.load(f)
         except (OSError, ValueError):
             continue
         for name, r in rows.items():
-            if (
-                isinstance(r, dict)
-                and r.get("rows_match")
-                and r.get("schema_match")
-                and r.get("hash_match")
-                and not r.get("err")
-            ):
-                green.add(name)
-    return green
+            green = isinstance(r, dict) and not r.get("err") and all(
+                r.get(k) for k in ("rows_match", "schema_match", "hash_match")
+            )
+            ranks[name] = rnd if green else 0
+    return ranks
 
 
-def _reorder() -> None:
-    """Rebuild QUERIES/ORACLES in grading-priority order: un-green
-    GRADING_PRIORITY names first (family-balanced head), then the
-    remaining never-green names in import order, then every query
-    that already has a green CORRECTNESS row."""
-    green = _graded_green() - set(FORCE_REGRADE)
-    forced = [n for n in FORCE_REGRADE if n in QUERIES]
-    head = forced + [
-        n
-        for n in GRADING_PRIORITY
-        if n in QUERIES and n not in green and n not in set(forced)
-    ]
-    mid = [n for n in QUERIES if n not in set(head) and n not in green]
-    tail = [n for n in QUERIES if n in green]
-    ordered = head + mid + tail
-    assert len(ordered) == len(QUERIES)
+def _reorder(root: str = _ROOT) -> None:
+    """Re-register QUERIES/ORACLES stalest verdict first: sort by
+    _graded_green() rank (0 for red or never graded), ties in import
+    order."""
+    rank = _graded_green(root)
+    ordered = sorted(QUERIES, key=lambda n: rank.get(n, 0))
     for d in (QUERIES, ORACLES):
         snapshot = dict(d)
         d.clear()

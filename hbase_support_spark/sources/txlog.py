@@ -243,7 +243,8 @@ def txlog_merge(
     src = source.localCheckpoint(eager=False)
     keys = src.select(key).distinct()
     touched = _touched_files(spark, files, keys, key)
-    untouched = [f for f in files if f not in set(touched)]
+    hit = set(touched)
+    untouched = [f for f in files if f not in hit]
     survivors = (
         _read_files(spark, touched).join(keys, key, "left_anti")
         if touched
@@ -282,8 +283,9 @@ def txlog_delete(spark: SparkSession, table_dir: str, predicate: str) -> int:
         .distinct()
         .collect()
     )
-    touched = sorted(_manifest_entries(files, hit))
-    untouched = [f for f in files if f not in set(touched)]
+    entries = _manifest_entries(files, hit)
+    touched = sorted(entries)
+    untouched = [f for f in files if f not in entries]
     new_version = parent + 1
     new_files = (
         _write_data(
@@ -457,8 +459,9 @@ def txlog_changes(
     a 1 GB delta against a 100 TB table diffs ~the delta's files."""
     mf = _read_manifest(table_dir, v_from)
     mt = _read_manifest(table_dir, v_to)
-    from_only = [f for f in mf["files"] if f not in set(mt["files"])]
-    to_only = [f for f in mt["files"] if f not in set(mf["files"])]
+    from_set, to_set = set(mf["files"]), set(mt["files"])
+    from_only = [f for f in mf["files"] if f not in to_set]
+    to_only = [f for f in mt["files"] if f not in from_set]
 
     def read_or_empty(files: list[str], all_files: list[str]) -> DataFrame:
         if files:

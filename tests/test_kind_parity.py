@@ -5,11 +5,14 @@ Round-2 regression class: the driver's value-hash distinguishes numeric
 kinds (DuckDB ``SUM(int)``→HUGEINT vs Spark BIGINT, ``epoch()``→DOUBLE
 vs BIGINT, ``sign()``→TINYINT vs DOUBLE) while ``fetchall``-based value
 comparison collapses them — 4 driver failures and 15 latent ones in r02
-were invisible to the local sweep. This test plans (never executes)
-every registered query/oracle pair and fails on any kind divergence, so
-the class cannot recur — including after driver-side fixture
-regeneration, which has already changed parquet types once
-(io.py load_table docstring).
+were invisible to the local sweep. This test builds and plans every
+registered query/oracle pair, without running the query's own action,
+and fails on any kind divergence, so the class cannot recur —
+including after the fixtures are regenerated, which has already
+changed parquet types once (io.py load_table docstring). Building is
+not free: about two dozen operator and source sites run Spark actions
+(collect, head, count, an eager localCheckpoint) while their DataFrame
+is built (ROADMAP §2).
 """
 
 from __future__ import annotations

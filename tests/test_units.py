@@ -223,11 +223,65 @@ def test_registry_orders_ungraded_before_green():
     from hbase_support_spark.registry import QUERIES, _graded_green
 
     names = list(QUERIES)
-    green = _graded_green()
+    green = {n for n, rnd in _graded_green().items() if rnd}
     if not green:
         return  # fresh checkout without correctness files
     first_green = min(names.index(n) for n in green if n in names)
     assert all(n in green for n in names[first_green:])
+
+
+def test_registry_orders_stalest_verdict_first(tmp_path, monkeypatch):
+    """The schedule rule on a synthetic ledger: never graded and
+    latest-red names rank 0 and come first, then green names by the
+    round of their latest verdict, ties in import order."""
+    import json
+
+    from hbase_support_spark import registry
+
+    ledger = {
+        1: {"old_green": True, "flipped_red": True, "green_twice": True},
+        2: {"flipped_red": False, "tie_b": True, "tie_a": True},
+        3: {"green_twice": True},
+    }
+    for rnd, verdicts in ledger.items():
+        rows = {
+            n: {"rows_match": ok, "schema_match": True, "hash_match": True, "err": None}
+            for n, ok in verdicts.items()
+        }
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+    (tmp_path / "CORRECTNESS_r04.json").write_text("{not json")
+    assert registry._graded_green(str(tmp_path)) == {
+        "old_green": 1, "flipped_red": 0, "green_twice": 3, "tie_b": 2, "tie_a": 2
+    }
+    imported = ["green_twice", "tie_b", "never", "old_green", "flipped_red", "tie_a"]
+    monkeypatch.setattr(registry, "QUERIES", {n: None for n in imported})
+    monkeypatch.setattr(registry, "ORACLES", {"tie_b": "b", "never": "n"})
+    registry._reorder(str(tmp_path))
+    assert list(registry.QUERIES) == [
+        "never", "flipped_red", "old_green", "tie_b", "tie_a", "green_twice"
+    ]
+    assert list(registry.ORACLES) == ["never", "tie_b"]
+
+
+def test_grading_window_is_the_50_stalest_names():
+    """On the committed ledger the head 50 are the names whose latest
+    green verdict is oldest, in import order within a round, and the
+    newest round's window is not graded again."""
+    import glob
+    import json
+    import os
+
+    from hbase_support_spark import registry
+
+    ledgers = glob.glob(os.path.join(registry._ROOT, "CORRECTNESS_r*.json"))
+    if not ledgers:
+        return  # fresh checkout without correctness files
+    rank = registry._graded_green()
+    names = list(registry.QUERIES)
+    assert names[:50] == sorted(names, key=lambda n: rank.get(n, 0))[:50]
+    newest = max(ledgers, key=lambda p: int(p.rsplit("_r", 1)[1].split(".")[0]))
+    with open(newest) as f:
+        assert not set(names[:50]) & set(json.load(f))
 
 
 def test_lsh_recall_report_tradeoff_on_synthetic_pairs(spark, tmp_path):
@@ -302,19 +356,6 @@ def test_er_banding_covers_higher_band_smaller_key(spark, tmp_path):
         con,
     )
     assert ok, detail
-
-
-def test_grading_priority_names_resolve():
-    """A typo'd name in GRADING_PRIORITY silently drops that query
-    out of the driver's grading window (_reorder skips unknown
-    names). Every scheduled name must exist in the registry."""
-    from hbase_support_spark import QUERIES, load_all
-    from hbase_support_spark.registry import GRADING_PRIORITY
-
-    load_all()
-    missing = [n for n in GRADING_PRIORITY if n not in QUERIES]
-    assert not missing, f"GRADING_PRIORITY names not in registry: {missing}"
-    assert len(set(GRADING_PRIORITY)) == len(GRADING_PRIORITY), "duplicates"
 
 
 # ---------------------------------------------------------------- round-3 late ops
@@ -625,25 +666,6 @@ def test_preference_pairs_structure(spark, sf_dir):
     got = pairs.groupby("lang").size()
     for lang, n in per_lang.items():
         assert got.get(lang, 0) == n // 2
-
-
-def test_round3_grading_window_head_is_pinned():
-    """The driver grades the FIRST 50 registered names; the round-3
-    window was hand-staged (19 kind-cast fixes, ADVICE-touched rows,
-    judge-named high-value rows). Pin the head so a registry edit
-    can't silently reshuffle what the next driver run grades."""
-    from hbase_support_spark import registry
-
-    registry.load_all()
-    head = list(registry.QUERIES)[:50]
-    expect_head4 = ["sim_lsh_hyperplane", "fn_date", "fn_math", "stream_session_30m"]
-    green = registry._graded_green()
-    if any(n in green for n in expect_head4):
-        return  # r03 graded: window legitimately advanced past these
-    assert head[:4] == expect_head4
-    # and the whole head must come from GRADING_PRIORITY order
-    pr = [n for n in registry.GRADING_PRIORITY if n in registry.QUERIES and n not in green]
-    assert head == pr[:50]
 
 
 def test_vec_pair_block_cap_enforced(spark):

@@ -25,8 +25,8 @@ import time
 
 sys.path.insert(0, ".")
 
-from hbase_support_spark import get_spark, load_all, QUERIES, ORACLES
-from hbase_support_spark.parity import compare, duckdb_connect
+from hbase_support_spark import get_spark
+from tools.run_parity import sweep
 from tools.scale_stress import build
 
 
@@ -34,34 +34,13 @@ def main() -> None:
     r = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.01"
     names = sys.argv[3:]
-    load_all()
     spark = get_spark("regen-drill", master="local[8]", shuffle_partitions=8)
     dst = os.path.abspath(f".scratch/regen_x{r}")
     if not os.path.exists(f"{dst}/lineitem.parquet"):
         t0 = time.time()
         build(spark, src, dst, r)
         print(f"built x{r} drill set in {time.time() - t0:.1f}s -> {dst}")
-    con = duckdb_connect(dst)
-    todo = [n for n in QUERIES if not names or any(f in n for f in names)]
-    failed = []
-    for name in todo:
-        t0 = time.time()
-        try:
-            df = QUERIES[name](spark, dst)
-            if name in ORACLES:
-                ok, detail = compare(df, ORACLES[name], con)
-            else:
-                cnt = df.count()
-                ok, detail = True, f"rows-only ({cnt} rows)"
-        except Exception as e:  # noqa: BLE001
-            ok, detail = False, f"EXCEPTION: {type(e).__name__}: {str(e)[:300]}"
-        dt = time.time() - t0
-        print(f"{'PASS' if ok else 'FAIL'} {name:32s} {dt:6.2f}s  {detail}")
-        if not ok:
-            failed.append(name)
-    print(f"\n{len(todo) - len(failed)}/{len(todo)} passed on regen drill x{r}")
-    if failed:
-        print("failed:", ", ".join(failed))
+    if sweep(spark, dst, names, f"regen drill x{r}"):
         sys.exit(1)
 
 

@@ -33,15 +33,14 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F
 
-from hbase_support_spark import QUERIES, ORACLES, get_spark, load_all
+from hbase_support_spark import get_spark
 from hbase_support_spark.io import TABLES, load_table
-from hbase_support_spark.parity import compare, duckdb_connect
+from tools.run_parity import sweep
 
 
 def build(spark, src: str, dst: str) -> None:
@@ -74,31 +73,12 @@ def build(spark, src: str, dst: str) -> None:
 def main() -> None:
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     names = sys.argv[2:]
-    load_all()
     spark = get_spark("text-drill", master="local[8]", shuffle_partitions=8)
     dst = os.path.abspath(
         ".scratch/textdrill_" + os.path.basename(os.path.normpath(src))
     )
     build(spark, src, dst)
-    con = duckdb_connect(dst)
-    todo = [n for n in QUERIES if not names or any(f in n for f in names)]
-    failed = []
-    for name in todo:
-        t0 = time.time()
-        try:
-            df = QUERIES[name](spark, dst)
-            if name in ORACLES:
-                ok, detail = compare(df, ORACLES[name], con)
-            else:
-                ok, detail = df.count() >= 0, "rows-only"
-        except Exception as e:  # noqa: BLE001
-            ok, detail = False, f"{type(e).__name__}: {str(e)[:160]}"
-        print(f"{'PASS' if ok else 'FAIL'} {name:36s} {time.time() - t0:5.2f}s  {detail}")
-        if not ok:
-            failed.append(name)
-    print(f"\n{len(todo) - len(failed)}/{len(todo)} passed on degenerate-text data")
-    if failed:
-        print("failed:", ", ".join(failed))
+    if sweep(spark, dst, names, "degenerate-text data"):
         sys.exit(1)
 
 
