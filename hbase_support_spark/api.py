@@ -36,8 +36,9 @@ graded semantics.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import StructType
 
-from .io import load_table
+from .io import load_table, local_frame
 
 
 class Table:
@@ -58,11 +59,18 @@ class Table:
         return self.df.filter(F.col(self.key) == F.lit(rowkey))
 
     def multi_get(self, rowkeys: list) -> DataFrame:
-        """``Table.get(List<Get>)`` — batched lookup as a broadcast
-        semi-join: the probe list never shuffles the table."""
-        spark = self.df.sparkSession
-        probe = spark.createDataFrame([(k,) for k in rowkeys], [self.key])
-        return self.df.join(F.broadcast(probe), self.key, "left_semi")  # bcast: keys
+        """``Table.get(List<Get>)`` — batched lookup as a semi-join
+        against a LocalRelation of the keys, typed as the table's key
+        column: no Python worker runs, and its exact size lets the
+        planner broadcast it without a hint, so the probe never
+        shuffles the table. Absent, duplicate and null keys match
+        nothing extra."""
+        probe = local_frame(
+            self.df.sparkSession,
+            [(k,) for k in rowkeys],
+            StructType([self.df.schema[self.key]]),
+        )
+        return self.df.join(probe, self.key, "left_semi")
 
     def scan(
         self,

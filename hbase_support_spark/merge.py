@@ -37,6 +37,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.utils import AnalysisException
+from pyspark.sql.types import StructType
 
 from .io import ensure_confs
 
@@ -162,6 +163,7 @@ def bulk_delete(
     target_path: str,
     predicate: Column,
     partition_col: str,
+    schema: StructType | None = None,
 ) -> dict:
     """Predicate delete over partitioned Parquet — the
     BulkDeleteEndpoint analog (HBase's server-side delete-by-scan),
@@ -183,10 +185,15 @@ def bulk_delete(
     the rewrite this function explicitly drops the directories of
     touched partitions that have no survivors. Both collects here are
     metadata-scale (distinct partition values of the delta, not data).
+
+    ``schema``, the table's schema as its writer had it, skips the
+    inference job and lets a table with no part files (zero rows)
+    read as empty; without it the schema is inferred.
     """
     ensure_confs(spark)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    full = spark.read.parquet(target_path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    full = reader.parquet(target_path)
     touched = [
         r[0]
         for r in full.filter(predicate).select(partition_col).distinct().collect()

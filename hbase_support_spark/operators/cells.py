@@ -390,17 +390,17 @@ def bulk_delete_predicate(spark, sf_dir):
 
     scratch = scratch_root()
     target = os.path.join(scratch, "bulkdel_orders")
-    load_table(spark, sf_dir, "orders").write.mode("overwrite").partitionBy(
-        "o_orderstatus"
-    ).parquet(target)
+    orders = load_table(spark, sf_dir, "orders")
+    orders.write.mode("overwrite").partitionBy("o_orderstatus").parquet(target)
     bulk_delete(
         spark,
         target,
         (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 300000),
         "o_orderstatus",
+        schema=orders.schema,
     )
     return (
-        spark.read.parquet(target)
+        spark.read.schema(orders.schema).parquet(target)
         .groupBy("o_orderstatus")
         .agg(F.count("*").alias("cnt"))
     )

@@ -30,7 +30,7 @@ from pyspark.sql.types import (
 )
 
 from ..hashutil import d_h60, h60
-from ..io import load_table, write_parquet, write_csv, read_csv, scratch_root
+from ..io import load_table, local_frame, write_parquet, write_csv, read_csv, scratch_root
 from ..num import money_sum
 from ..registry import register
 
@@ -109,10 +109,14 @@ def point_get(spark, sf_dir):
 )
 def multi_get(spark, sf_dir):
     """Batched Table.get(List<Get>) — LEFT SEMI JOIN against a
-    broadcast key list (absent keys simply don't match)."""
+    broadcast key list (absent keys simply don't match). The keys are
+    a LocalRelation typed as the key column (`io.local_frame`, the
+    same probe as `api.Table.multi_get`)."""
     c = load_table(spark, sf_dir, "customer")
-    keys = spark.createDataFrame(
-        [(1,), (7,), (42,), (99,), (1000,), (123456789,)], ["c_custkey"]
+    keys = local_frame(
+        spark,
+        [(1,), (7,), (42,), (99,), (1000,), (123456789,)],
+        StructType([c.schema["c_custkey"]]),
     )
     return c.join(F.broadcast(keys), "c_custkey", "left_semi").select(  # bcast: keys
         "c_custkey", "c_name", "c_acctbal"
@@ -214,11 +218,14 @@ def source_json_roundtrip(spark, sf_dir):
 def sink_partitioned_parquet(spark, sf_dir):
     """Partitioned sink (CopyTable into a partitioned layout): write
     orders partitioned by status, re-read, aggregate per partition.
-    Partition column round-trips through directory names."""
+    Partition column round-trips through directory names. The read
+    back uses the schema the writer had (partition discovery still
+    puts the partition column last): no inference job, and zero-row
+    orders — a directory with no part files — read as empty."""
     orders = load_table(spark, sf_dir, "orders")
     dst = os.path.join(_scratch(), "orders_by_status")
     write_parquet(orders, dst, partition_by=["o_orderstatus"])
-    back = spark.read.parquet(dst)
+    back = spark.read.schema(orders.schema).parquet(dst)
     return back.groupBy("o_orderstatus").agg(
         F.count("*").alias("cnt"),
         money_sum("o_totalprice").alias("total"),
@@ -1982,22 +1989,22 @@ def sink_partition_pruning_audit(spark, sf_dir):
     directories — the measured file count IS the evidence. The
     oracle restates the expectation from the raw table: files == days
     in range, rows == rows in range."""
-    ev = load_table(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
     dst = os.path.join(_scratch(), "events_by_day")
     (
-        ev.withColumn("day", F.to_date("ts"))
-        .repartition("day")
+        ev.repartition("day")
         .write.mode("overwrite")
         .partitionBy("day")
         .parquet(dst)
     )
-    back = spark.read.parquet(dst).filter(
+    # read back with the writer's schema: zero-row events leave no
+    # part files, and inference would fail on them
+    written = spark.read.schema(ev.schema).parquet(dst)
+    back = written.filter(
         (F.col("day") >= F.lit("2024-01-10").cast("date"))
         & (F.col("day") < F.lit("2024-01-16").cast("date"))
     )
-    total_days = (
-        spark.read.parquet(dst).select("day").distinct().count()
-    )
+    total_days = written.select("day").distinct().count()
     return (
         back.withColumn("src_file", F.input_file_name())
         .agg(

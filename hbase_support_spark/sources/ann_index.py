@@ -13,6 +13,10 @@ layout.py persists physical layouts:
                                 reads only nprobe of nlist directories
                                 (PartitionFilters-level pruning — files
                                 of unprobed cells are never listed).
+  <index_dir>/_assignments_schema.json
+                                the assignments' schema as written;
+                                every read passes it to the Parquet
+                                reader (`_read_assignments`).
 
 Probe cost at 100 TB: rank nlist centroids against the query (driver-
 side, micro), then scan nprobe/nlist of the corpus with a map-only
@@ -31,7 +35,30 @@ hash-compared oracles.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+_SCHEMA_FILE = "_assignments_schema.json"
+
+
+def _read_assignments(
+    spark: SparkSession, index_dir: str, path: str | None = None
+) -> DataFrame:
+    """Read the assignments (or their staged copy at ``path``) with the
+    schema ``ivf_build`` recorded beside them, the way a txlog manifest
+    carries its version's schema: no inference job, and an index of
+    zero vectors — no ``cell_id=`` directories at all — reads as an
+    empty frame instead of failing inference. An index built without
+    the record (a local file, like txlog's manifests) is inferred."""
+    reader = spark.read
+    sidecar = os.path.join(index_dir, _SCHEMA_FILE)
+    if os.path.exists(sidecar):
+        with open(sidecar) as f:
+            reader = reader.schema(StructType.fromJson(json.load(f)))
+    return reader.parquet(path or f"{index_dir}/assignments")
 
 
 def _dot(a, b):
@@ -115,6 +142,8 @@ def ivf_build(
         .partitionBy("cell_id")
         .parquet(f"{index_dir}/assignments")
     )
+    with open(os.path.join(index_dir, _SCHEMA_FILE), "w") as f:
+        json.dump(assigned.schema.jsonValue(), f)
     # r12: the return stats used to re-run the assignment pass twice
     # more (centroids.count() and assigned.count() each recomputed
     # the full subtree). The just-written nlist-row centroid table
@@ -277,9 +306,9 @@ def ivf_delete(
     from ..merge import bulk_delete
 
     src = f"{index_dir}/assignments"
+    assignments = _read_assignments(spark, index_dir)
     per_cell = (
-        spark.read.parquet(src)
-        .filter(predicate)
+        assignments.filter(predicate)
         .groupBy("cell_id")
         .agg(F.count("*").alias("n_del"))
         .collect()
@@ -287,7 +316,7 @@ def ivf_delete(
     if not per_cell:
         return {"n_deleted": 0, "touched_cells": [], "emptied_cells": []}
     dels = {int(r.cell_id): int(r.n_del) for r in per_cell}
-    stats = bulk_delete(spark, src, predicate, "cell_id")
+    stats = bulk_delete(spark, src, predicate, "cell_id", schema=assignments.schema)
     cents = spark.read.parquet(f"{index_dir}/centroids").collect()
     new_rows = [
         (
@@ -340,13 +369,13 @@ def ivf_compact(
     src = f"{index_dir}/assignments"
     staged = f"{index_dir}/assignments__staged"
     files_before = _count_data_files(spark, src)
-    df = spark.read.parquet(src)
+    df = _read_assignments(spark, index_dir)
     n_src = df.count()
     w = df.repartition("cell_id").write.mode("overwrite")
     if max_records_per_file:
         w = w.option("maxRecordsPerFile", max_records_per_file)
     w.partitionBy("cell_id").parquet(staged)
-    n_dst = spark.read.parquet(staged).count()
+    n_dst = _read_assignments(spark, index_dir, staged).count()
     if n_dst != n_src:
         raise ValueError(
             f"compaction row-count mismatch ({n_src} -> {n_dst}); "
@@ -462,7 +491,7 @@ def ivf_probe(
         .limit(nprobe)
         .collect()
     ]  # nprobe ints — metadata-scale
-    cand = spark.read.parquet(f"{index_dir}/assignments").filter(
+    cand = _read_assignments(spark, index_dir).filter(
         F.col("cell_id").isin(probe)
     )
     if exclude_id is not None:

@@ -25,14 +25,36 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
+def _entries(df: DataFrame, indexed_col: str, key_col: str, n_buckets: int) -> DataFrame:
+    """``df``'s index entries: (value, rowkey, bucket of the value)."""
+    return df.select(indexed_col, key_col).withColumn(
+        "bucket", F.crc32(F.col(indexed_col).cast("string")) % n_buckets
+    )
+
+
+def _read_index(
+    spark: SparkSession,
+    index_dir: str,
+    base: DataFrame,
+    indexed_col: str,
+    key_col: str,
+    n_buckets: int,
+) -> DataFrame:
+    """The index table, read with the schema its writer had — derived
+    from the base table, so no inference job runs, and an index of an
+    empty base (a partitioned dir with no data files, only _SUCCESS)
+    reads as empty instead of failing inference."""
+    schema = _entries(base, indexed_col, key_col, n_buckets).schema
+    return spark.read.schema(schema).parquet(index_dir)
+
+
 def index_build(
     df: DataFrame, index_dir: str, indexed_col: str, key_col: str, n_buckets: int = 16
 ) -> None:
     """Write the (value, rowkey) index table, partitioned by value
     bucket. One shuffle of two narrow columns — never the full rows."""
     (
-        df.select(indexed_col, key_col)
-        .withColumn("bucket", F.crc32(F.col(indexed_col).cast("string")) % n_buckets)
+        _entries(df, indexed_col, key_col, n_buckets)
         .repartition("bucket")
         .sortWithinPartitions(indexed_col)
         .write.mode("overwrite")
@@ -52,15 +74,7 @@ def index_lookup(
 ) -> DataFrame:
     """Equality probe via the index: bucket-pruned index scan ->
     broadcast semi-join of the recovered keys onto the base table."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        idx = spark.read.parquet(index_dir)
-    except AnalysisException:
-        # an empty base table writes a partitioned dir with no data
-        # files (only _SUCCESS) — schema inference fails; the correct
-        # answer is simply the empty result
-        return base.limit(0)
+    idx = _read_index(spark, index_dir, base, indexed_col, key_col, n_buckets)
     bucket = F.crc32(F.lit(str(value))) % n_buckets
     keys = (
         idx.filter((F.col("bucket") == bucket) & (F.col(indexed_col) == value))
@@ -93,20 +107,19 @@ def index_incremental_update(
     updated keys) ∪ (delta entries). Returns
     {buckets_total, buckets_rewritten} so callers — and tests — see
     the write amplification."""
-    bucket_of = lambda c: F.crc32(c.cast("string")) % n_buckets  # noqa: E731
     keys = delta.select(key_col).distinct()
-    old_entries = base_before.join(keys, key_col, "left_semi").select(
-        indexed_col, key_col
+    old_entries = _entries(
+        base_before.join(keys, key_col, "left_semi"), indexed_col, key_col, n_buckets
     )
-    new_entries = delta.select(indexed_col, key_col)
+    new_entries = _entries(delta, indexed_col, key_col, n_buckets)
     touched = sorted(
         r["bucket"]
-        for r in old_entries.select(bucket_of(F.col(indexed_col)).alias("bucket"))
-        .unionAll(new_entries.select(bucket_of(F.col(indexed_col)).alias("bucket")))
+        for r in old_entries.select("bucket")
+        .unionAll(new_entries.select("bucket"))
         .distinct()
         .collect()
     )  # bucket-id list: metadata-scale driver round-trip
-    idx = spark.read.parquet(index_dir)
+    idx = _read_index(spark, index_dir, base_before, indexed_col, key_col, n_buckets)
     # Materialize survivors BEFORE the overwrite below: the write
     # targets index_dir while this frame lazily reads from it, and
     # relying on dynamic partitionOverwriteMode staging its output
@@ -118,9 +131,7 @@ def index_incremental_update(
     survivors = idx.filter(F.col("bucket").isin(touched)).join(
         keys, key_col, "left_anti"
     ).localCheckpoint(eager=True)
-    additions = new_entries.withColumn(
-        "bucket", bucket_of(F.col(indexed_col))
-    ).select(*survivors.columns)
+    additions = new_entries.select(*survivors.columns)
     (
         survivors.unionByName(additions)
         .repartition("bucket")

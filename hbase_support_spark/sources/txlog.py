@@ -10,22 +10,31 @@ Parquet + an atomic-exclusive publish — both available on any storage):
   table_dir/
     files/v000001/part-*.parquet   immutable data, one dir per commit
     _txlog/v000001.json            manifest: files list + parent + op
+                                   + the version's schema
 
   * Readers resolve the LATEST manifest (or any pinned version — time
     travel) and scan exactly its file list; a concurrent writer can
     never make a reader see a half-commit, because data files are
     written BEFORE the manifest and the manifest appears atomically
     (os.link of a temp file — fails EEXIST on a commit race).
-  * Each version's relation is resolved once per session: the
-    mergeSchema read of a file list starts a footer-scan Spark job,
-    so `_read_files` memoizes the resolved DataFrame on the file list
-    itself (a bounded LRU). The key needs no invalidation — every
-    commit writes a fresh `files/v{N}-{uuid}` directory with
-    mode("error"), so a tuple of paths always names the same bytes,
-    and `txlog_vacuum` deletes only files no kept manifest lists. The
-    first read after a commit still pays the inference once; repeat
-    Gets/Scans of that version, and the next MERGE's touched-file
-    scan of it, start no schema job.
+  * Every manifest carries the schema of its whole version (the
+    Delta log / Iceberg metadata move): the parent's schema widened
+    by the written frame's new columns, parent fields first — the
+    order mergeSchema produces — and every field nullable, as a
+    Parquet read has them. A read passes it to the Parquet reader,
+    so resolving a version starts no Spark job: not the first read
+    after a commit, not merge's read of its touched files, not
+    compaction. A manifest written without a schema is read with
+    mergeSchema (a footer-scan job) and needs no migration; the next
+    commit on it writes one.
+  * Each version's relation is still resolved once per session:
+    `_read_files` memoizes the DataFrame on (session, file tuple,
+    schema), a bounded LRU, so repeat Gets/Scans of a version and the
+    next MERGE's touched-file scan of it skip even the JVM-side
+    relation build. The key needs no invalidation — every commit
+    writes a fresh `files/v{N}-{uuid}` directory with mode("error"),
+    so a tuple of paths always names the same bytes, and
+    `txlog_vacuum` deletes only files no kept manifest lists.
   * MERGE rewrites only the files that actually contain matched keys
     (file-level COW): the touched-file set comes from one pruned
     input_file_name() scan semi-joined against the source keys;
@@ -51,6 +60,9 @@ import uuid
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+from ..io import session_key
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -115,36 +127,124 @@ def _commit(table_dir: str, version: int, manifest: dict) -> None:
             os.unlink(tmp)
 
 
+def _nullable(t):
+    """A StructType-JSON type with every field, array element and map
+    value nullable — how a Parquet read reports any schema."""
+    if not isinstance(t, dict):
+        return t  # a primitive: "long", "decimal(12,2)", ...
+    if t["type"] == "struct":
+        return {**t, "fields": [
+            {**f, "nullable": True, "type": _nullable(f["type"])} for f in t["fields"]
+        ]}
+    if t["type"] == "array":
+        return {**t, "containsNull": True, "elementType": _nullable(t["elementType"])}
+    if t["type"] == "map":
+        return {**t, "valueContainsNull": True, "keyType": _nullable(t["keyType"]),
+                "valueType": _nullable(t["valueType"])}
+    return t
+
+
+def _widen(old, new):
+    """mergeSchema's merge of two StructType-JSON types: ``old``'s
+    struct fields in their order, widened recursively, then ``new``'s
+    extra fields. Where the two disagree on a non-struct type, ``old``
+    (the table's type) stands; mergeSchema would fail the read, and so
+    does the Parquet reader on a file it cannot convert."""
+    if not (isinstance(old, dict) and isinstance(new, dict) and old["type"] == new["type"]):
+        return old
+    if old["type"] == "array":
+        return {**old, "elementType": _widen(old["elementType"], new["elementType"])}
+    if old["type"] == "map":
+        return {**old, "valueType": _widen(old["valueType"], new["valueType"])}
+    if old["type"] != "struct":
+        return old
+    by_name = {f["name"]: f for f in new["fields"]}
+    fields = [
+        {**f, "type": _widen(f["type"], by_name[f["name"]]["type"])}
+        if f["name"] in by_name else f
+        for f in old["fields"]
+    ]
+    have = {f["name"] for f in old["fields"]}
+    return {**old, "fields": fields + [f for f in new["fields"] if f["name"] not in have]}
+
+
+def _version_schema(parent: dict | None, written: DataFrame) -> dict:
+    """The schema a commit records: the parent version's, widened by
+    the frame the commit wrote."""
+    w = _nullable(written.schema.jsonValue())
+    return w if parent is None else _widen(parent, w)
+
+
+def _schema_of(spark: SparkSession, manifest: dict) -> dict:
+    """A version's schema: its manifest's, or for a manifest written
+    without one, the (memoized) mergeSchema read's."""
+    return manifest.get("schema") or _nullable(
+        _read_files(spark, manifest["files"]).schema.jsonValue()
+    )
+
+
+class _Session:
+    """Memo-key wrapper: hashes and compares by `io.session_key`, so
+    every Python wrapper of one server-side session shares entries."""
+
+    __slots__ = ("spark", "key")
+
+    def __init__(self, spark: SparkSession):
+        self.spark, self.key = spark, session_key(spark)
+
+    def __hash__(self):
+        return hash(self.key)
+
+    def __eq__(self, other):
+        return self.key == other.key
+
+
 # Bound on memoized file lists: a streaming sink commits once per
 # micro-batch, so an unbounded memo would grow with the stream.
 _READ_MEMO_SIZE = 16
 
 
 @functools.lru_cache(maxsize=_READ_MEMO_SIZE)
-def _resolve(spark: SparkSession, files: tuple[str, ...]) -> DataFrame:
-    return spark.read.option("mergeSchema", "true").parquet(*files)
+def _resolve(
+    session: _Session, files: tuple[str, ...], schema: str | None
+) -> DataFrame:
+    reader = session.spark.read
+    if schema is None:
+        return reader.option("mergeSchema", "true").parquet(*files)
+    return reader.schema(StructType.fromJson(json.loads(schema))).parquet(*files)
 
 
-def _read_files(spark: SparkSession, files: list[str]) -> DataFrame:
-    """Read a manifest's file list with mergeSchema — after a
-    schema-widening merge the list mixes pre- and post-widening files,
-    and a plain read would take an arbitrary file's schema and silently
-    drop the widened column. EVERY read over manifest file lists
+def _read_files(
+    spark: SparkSession, files: list[str], schema: dict | None = None
+) -> DataFrame:
+    """Read part of a version's file list with the version's
+    ``schema`` (its manifest's) — after a schema-widening merge the
+    list mixes pre- and post-widening files, and a plain read would
+    take an arbitrary file's schema and silently drop the widened
+    column. A subset (merge's touched files, a pruned scan) reads with
+    the whole version's columns. EVERY read over manifest file lists
     (txlog_read, merge survivors, delete rewrite, compact, touched-file
     scan, stats, scan, CDC) comes through here.
 
-    The resolved relation is memoized on (session, file tuple), the
-    `io._TABLE_CACHE` precedent: mergeSchema always runs a Spark job
-    that reads every file's footer (30-60 ms on a 15k-row table, about
-    half a point Get), and pure plan reuse skips it. Data files are
-    immutable and vacuum only deletes files no kept manifest lists, so
-    an entry is never stale. A DataFrame belongs to its session, so
-    the session object is in the key: a foreachBatch clone session
-    (AQE off) and the outer session never share a plan, and since
-    PySpark wraps each micro-batch's session in a new object, reads
-    inside foreachBatch hit only within their own batch. Repeated
-    reads of a version return the same DataFrame; alias both sides to
-    self-join it.
+    With a schema the read starts no Spark job. Without one (a
+    manifest written before manifests carried schemas) it infers with
+    mergeSchema, which runs a job that reads every file's footer: the
+    first read after each commit paid one, each merge one more for
+    its new touched-file tuple, and each compaction one. Traced
+    kv_mixed (seed 1, 4 vCPUs): the first read after a commit fell
+    from 41-60 ms with that job to 7-9 ms with none, a merge from 9-10
+    jobs to 9, a compaction from 2 jobs (135 ms) to 1 (93 ms).
+
+    The resolved relation is memoized on (session, file tuple,
+    schema), the `io._TABLE_CACHE` precedent: even a schema read
+    builds a new relation in the JVM, and pure plan reuse skips it.
+    Data files are immutable and vacuum only deletes files no kept
+    manifest lists, so an entry is never stale. A DataFrame belongs
+    to its session, so the session is in the key, as `io.session_key`:
+    a foreachBatch clone session and the outer session never share a
+    plan, while the clone's micro-batches, each wrapped in a new
+    Python object, share its entries. Repeated reads of a version
+    return the same DataFrame; alias both sides to self-join it.
 
     Negative A/B (kept out): also resolving each new version at commit
     time, so the first read after a commit hits too. kv_mixed, 20 s,
@@ -162,7 +262,18 @@ def _read_files(spark: SparkSession, files: list[str]) -> DataFrame:
     20 s, 10 pairs, seeds 41-50, 4 vCPUs: op_p50_ms fell only 18.8%
     (234 to 190 ms), against 27.6% and 23.6% for this memo in the
     next two 10-pair sets on the same host (seeds 51-70)."""
-    return _resolve(spark, tuple(files))
+    key = json.dumps(schema) if schema else None
+    return _resolve(_Session(spark), tuple(files), key)
+
+
+def _read_version(
+    spark: SparkSession, manifest: dict, files: list[str] | None = None
+) -> DataFrame:
+    """``files`` of a version (all of them by default), read with the
+    version's schema."""
+    return _read_files(
+        spark, manifest["files"] if files is None else files, manifest.get("schema")
+    )
 
 
 def _manifest_entries(files: list[str], rows) -> dict:
@@ -183,7 +294,13 @@ def txlog_init(df: DataFrame, table_dir: str) -> int:
     _commit(
         table_dir,
         1,
-        {"version": 1, "parent": 0, "op": "init", "files": files},
+        {
+            "version": 1,
+            "parent": 0,
+            "op": "init",
+            "files": files,
+            "schema": _version_schema(None, df),
+        },
     )
     return 1
 
@@ -191,13 +308,14 @@ def txlog_init(df: DataFrame, table_dir: str) -> int:
 def txlog_read(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:
-    """Read a pinned version (time travel) or the latest. Repeat
-    reads of a version reuse its memoized relation (`_read_files`)."""
+    """Read a pinned version (time travel) or the latest, with the
+    schema its manifest records. Repeat reads of a version reuse its
+    memoized relation (`_read_files`)."""
     versions = txlog_versions(table_dir)
     if not versions:
         raise FileNotFoundError(f"no txlog at {table_dir}")
     v = version if version is not None else versions[-1]
-    return _read_files(spark, _read_manifest(table_dir, v)["files"])
+    return _read_version(spark, _read_manifest(table_dir, v))
 
 
 def txlog_history(table_dir: str) -> list[dict]:
@@ -213,12 +331,15 @@ def txlog_history(table_dir: str) -> list[dict]:
 
 
 def _touched_files(
-    spark: SparkSession, files: list[str], keys: DataFrame, key: str
+    spark: SparkSession, manifest: dict, keys: DataFrame, key: str
 ) -> list[str]:
     """Files that contain at least one matched key — one pruned scan
     of only the key column + input_file_name(), semi-joined against
-    the (broadcast) source keys."""
-    cur = _read_files(spark, files).select(
+    the source keys. No broadcast hint, on purpose: merge sources grow
+    with the workload, and AQE broadcasts the keys at run time when
+    they are small."""
+    files = manifest["files"]
+    cur = _read_version(spark, manifest).select(
         F.col(key), F.input_file_name().alias("_file")
     )
     rows = (
@@ -242,11 +363,11 @@ def txlog_merge(
     files = manifest["files"]
     src = source.localCheckpoint(eager=False)
     keys = src.select(key).distinct()
-    touched = _touched_files(spark, files, keys, key)
+    touched = _touched_files(spark, manifest, keys, key)
     hit = set(touched)
     untouched = [f for f in files if f not in hit]
     survivors = (
-        _read_files(spark, touched).join(keys, key, "left_anti")
+        _read_version(spark, manifest, touched).join(keys, key, "left_anti")
         if touched
         else None
     )
@@ -266,6 +387,7 @@ def txlog_merge(
             "parent": parent,
             "op": "merge",
             "files": sorted(untouched + new_files),
+            "schema": _version_schema(_schema_of(spark, manifest), out),
         },
     )
     return new_version
@@ -275,8 +397,9 @@ def txlog_delete(spark: SparkSession, table_dir: str, predicate: str) -> int:
     """COW delete: rewrite only files containing matching rows."""
     versions = txlog_versions(table_dir)
     parent = versions[-1]
-    files = _read_manifest(table_dir, parent)["files"]
-    cur = _read_files(spark, files)
+    manifest = _read_manifest(table_dir, parent)
+    files = manifest["files"]
+    cur = _read_version(spark, manifest)
     hit = (
         cur.filter(predicate)
         .select(F.input_file_name().alias("_file"))
@@ -289,7 +412,7 @@ def txlog_delete(spark: SparkSession, table_dir: str, predicate: str) -> int:
     new_version = parent + 1
     new_files = (
         _write_data(
-            _read_files(spark, touched).filter(f"NOT ({predicate})"),
+            _read_version(spark, manifest, touched).filter(f"NOT ({predicate})"),
             table_dir,
             new_version,
         )
@@ -304,6 +427,7 @@ def txlog_delete(spark: SparkSession, table_dir: str, predicate: str) -> int:
             "parent": parent,
             "op": "delete",
             "files": sorted(untouched + new_files),
+            "schema": _schema_of(spark, manifest),
         },
     )
     return new_version
@@ -318,7 +442,8 @@ def txlog_compact(spark: SparkSession, table_dir: str, target_files: int = 4) ->
     pays; this is the scheduled job that pays it back."""
     versions = txlog_versions(table_dir)
     parent = versions[-1]
-    cur = _read_files(spark, _read_manifest(table_dir, parent)["files"])
+    manifest = _read_manifest(table_dir, parent)
+    cur = _read_version(spark, manifest)
     new_version = parent + 1
     new_files = _write_data(cur.coalesce(target_files), table_dir, new_version)
     _commit(
@@ -329,6 +454,7 @@ def txlog_compact(spark: SparkSession, table_dir: str, target_files: int = 4) ->
             "parent": parent,
             "op": "compact",
             "files": new_files,
+            "schema": _schema_of(spark, manifest),
         },
     )
     return new_version
@@ -371,7 +497,7 @@ def txlog_collect_stats(
     manifest = _read_manifest(table_dir, parent)
     files = manifest["files"]
     rows = (
-        _read_files(spark, files)
+        _read_version(spark, manifest)
         .select(F.col(key), F.input_file_name().alias("_file"))
         .groupBy("_file")
         .agg(F.min(key).alias("lo"), F.max(key).alias("hi"))
@@ -391,6 +517,7 @@ def txlog_collect_stats(
             "files": files,
             "stats_key": key,
             "stats": {f: by_file.get(f) for f in files},
+            "schema": _schema_of(spark, manifest),
         },
     )
     return new_version
@@ -426,9 +553,11 @@ def txlog_scan(
     else:
         keep = files
     df = (
-        _read_files(spark, keep).filter((F.col(key) >= lo) & (F.col(key) < hi))
+        _read_version(spark, manifest, keep).filter(
+            (F.col(key) >= lo) & (F.col(key) < hi)
+        )
         if keep
-        else _read_files(spark, files).filter(F.lit(False))
+        else _read_version(spark, manifest).filter(F.lit(False))
     )
     return df, {"files_total": len(files), "files_read": len(keep)}
 
@@ -463,13 +592,13 @@ def txlog_changes(
     from_only = [f for f in mf["files"] if f not in to_set]
     to_only = [f for f in mt["files"] if f not in from_set]
 
-    def read_or_empty(files: list[str], all_files: list[str]) -> DataFrame:
+    def read_or_empty(files: list[str], manifest: dict) -> DataFrame:
         if files:
-            return _read_files(spark, files)
-        return _read_files(spark, all_files).filter(F.lit(False))
+            return _read_version(spark, manifest, files)
+        return _read_version(spark, manifest).filter(F.lit(False))
 
-    old = read_or_empty(from_only, mf["files"])
-    new = read_or_empty(to_only, mt["files"])
+    old = read_or_empty(from_only, mf)
+    new = read_or_empty(to_only, mt)
     # schema evolution: compare over the union of value columns
     # (missing columns read as null on the narrow side)
     for c in new.columns:

@@ -29,6 +29,36 @@ def test_multi_get_matches_kernel(spark, sf_dir):
     assert rows(got, "c_custkey") == rows(want, "c_custkey")
 
 
+def test_multi_get_edge_key_lists(spark, sf_dir):
+    """An empty key list returns nothing; duplicate keys return their
+    row once; a null key matches nothing; a 5,000-key list returns
+    exactly its present keys."""
+    t = Table.open(spark, sf_dir, "customer", key="c_custkey")
+    assert t.multi_get([]).count() == 0
+    assert rows(t.multi_get([7, 7, 42, 7]), "c_custkey") == rows(
+        t.df.filter(F.col("c_custkey").isin([7, 42])), "c_custkey"
+    )
+    assert rows(t.multi_get([None, 42]), "c_custkey") == rows(
+        t.df.filter(F.col("c_custkey") == 42), "c_custkey"
+    )
+    many = list(range(-2_500, 2_500))
+    assert t.multi_get(many).count() == t.df.filter(
+        F.col("c_custkey").between(-2_500, 2_499)
+    ).count()
+
+
+def test_multi_get_probe_is_a_local_relation(spark, sf_dir):
+    """The key probe plans as LocalTableScan, broadcast without a hint:
+    no Python-RDD scan, so no Python worker runs for it. The graded
+    kernel builds its probe the same way."""
+    t = Table.open(spark, sf_dir, "customer", key="c_custkey")
+    for df in (t.multi_get([1, 7, 42]), registry.QUERIES["multi_get"](spark, sf_dir)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan
+        assert "Scan ExistingRDD" not in plan
+        assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+
+
 def test_scan_range_prefix_limit(spark, sf_dir):
     t = Table.open(spark, sf_dir, "customer", key="c_custkey")
     got = t.scan(start=100, stop=200)

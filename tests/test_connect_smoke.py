@@ -1,8 +1,8 @@
 """Spark Connect smoke (VERDICT r9 item 8, optional).
 
 The one execution mode the suite doesn't otherwise exercise: a client
-session with NO ``sparkContext`` (``io.load_table`` guards that path at
-io.py — the analyzed-relation memo must degrade gracefully, not crash).
+session with NO ``sparkContext`` (``io.load_table``'s analyzed-relation
+memo is keyed by ``io.session_key``, which never touches it).
 A deploy-time user on Databricks/Connect hits exactly this surface.
 
 The smoke runs in a SUBPROCESS because a classic local SparkContext is
@@ -93,7 +93,7 @@ def test_connect_smoke():
 def test_load_table_survives_missing_spark_context(spark, sf_dir):
     """The Connect-guard seam itself, testable without Connect: a
     session object whose sparkContext raises must still load tables
-    (memo skipped, not crashed)."""
+    (the memo key, `io.session_key`, never touches sparkContext)."""
     from hbase_support_spark.io import load_table
 
     class NoCtx:

@@ -87,6 +87,45 @@ def test_load_table_normalizes_both_ts_encodings(spark, tmp_path):
     _TABLE_CACHE.clear()
 
 
+def test_load_table_memo_is_per_session(spark, sf_dir):
+    """A newSession() clone (a foreachBatch session, which may run
+    with different confs) gets its own frame, bound to itself; each
+    session's repeat load is a memo hit."""
+    from hbase_support_spark.io import load_table
+
+    mine = load_table(spark, sf_dir, "nation")
+    other = spark.newSession()
+    theirs = load_table(other, sf_dir, "nation")
+    assert theirs is not mine
+    assert mine.sparkSession is spark
+    assert theirs.sparkSession is other
+    assert load_table(other, sf_dir, "nation") is theirs
+    assert load_table(spark, sf_dir, "nation") is mine
+
+
+def test_parity_sweep_survives_a_missing_fixture(spark, sf_dir, tmp_path, capsys):
+    """With one fixture table missing, the parity sweep still prints a
+    PASS/FAIL line per query: only the queries that read the missing
+    table fail."""
+    import os
+    import sys
+
+    from hbase_support_spark.io import TABLES
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from run_parity import sweep
+
+    dst = tmp_path / "sf_no_customer"
+    dst.mkdir()
+    for t in TABLES:
+        if t != "customer":
+            os.symlink(f"{sf_dir}/{t}.parquet", dst / f"{t}.parquet")
+    failed = sweep(spark, str(dst), ["point_get", "scan_reverse"])
+    out = capsys.readouterr().out
+    assert failed == ["point_get"]
+    assert "FAIL point_get" in out and "PASS scan_reverse" in out
+
+
 def test_queries_survive_empty_fixtures(spark, sf_dir, tmp_path):
     """One representative per operator family runs against zero-row
     fixtures without crashing (empty partitions, array_min of
@@ -120,6 +159,12 @@ def test_queries_survive_empty_fixtures(spark, sf_dir, tmp_path):
         "merge_into_txlog", "agg_bootstrap_ci_mean",
         # once crashed on empties: (0, -1) reshape, missing count row
         "sim_centroid_classify", "embedding_pca_power_top1",
+        # once crashed on empties: a partitioned write of zero rows
+        # leaves no part files, and the read back inferred its schema
+        "ann_index_append", "ann_index_delete", "ann_index_compact",
+        "sim_knn_ivf_persisted", "index_incremental_lookup",
+        "sink_partitioned_parquet", "sink_partition_pruning_audit",
+        "bulk_delete_predicate",
     ]
     for name in reps:
         QUERIES[name](spark, dst).write.format("noop").mode("overwrite").save()

@@ -379,17 +379,19 @@ def _jobs_during(spark, group, fn):
 
 
 def test_repeat_read_of_a_version_starts_no_job(spark, table):
-    """The first read of a version resolves its schema (mergeSchema's
-    footer-scan job); a second read of the same version reuses the
-    memoized relation, starts no job, and returns the same rows."""
+    """A version whose manifest carries its schema resolves without a
+    Spark job, even on its first read; a second read of the same
+    version is a memo hit, returns the same DataFrame, and starts no
+    job either."""
     first, jobs_first = _jobs_during(
         spark, "txlog-memo-first", lambda: txlog_read(spark, table)
     )
     second, jobs_second = _jobs_during(
         spark, "txlog-memo-second", lambda: txlog_read(spark, table, version=1)
     )
-    assert jobs_first >= 1
+    assert jobs_first == 0
     assert jobs_second == 0
+    assert second is first
     assert sorted(second.collect()) == sorted(first.collect())
 
 
@@ -401,21 +403,25 @@ def test_memo_is_bounded_lru(spark, table):
         _resolve,
     )
 
-    files = _read_manifest(table, 1)["files"]
+    manifest = _read_manifest(table, 1)
+    files, schema = manifest["files"], manifest["schema"]
     lists = [files[i : i + w] for w in (1, 2, 3) for i in range(len(files) - w + 1)]
     assert len(lists) > _READ_MEMO_SIZE
     for fl in lists:
-        _read_files(spark, fl)
+        _read_files(spark, fl, schema)
         assert _resolve.cache_info().currsize <= _READ_MEMO_SIZE
     assert _resolve.cache_info().currsize == _READ_MEMO_SIZE
-    _, newest = _jobs_during(
-        spark, "txlog-memo-newest", lambda: _read_files(spark, lists[-1])
+    before = _resolve.cache_info()
+    _read_files(spark, lists[-1], schema)
+    after_newest = _resolve.cache_info()
+    _read_files(spark, lists[0], schema)
+    after_oldest = _resolve.cache_info()
+    # the newest is still memoized; the oldest was evicted, resolved again
+    assert (after_newest.hits, after_newest.misses) == (before.hits + 1, before.misses)
+    assert (after_oldest.hits, after_oldest.misses) == (
+        after_newest.hits,
+        after_newest.misses + 1,
     )
-    _, oldest = _jobs_during(
-        spark, "txlog-memo-oldest", lambda: _read_files(spark, lists[0])
-    )
-    assert newest == 0  # still memoized
-    assert oldest >= 1  # evicted, resolved again
 
 
 def test_memo_is_per_session(spark, table):
@@ -462,3 +468,150 @@ def test_file_matching_survives_uri_escaped_table_paths(spark, tmp_path):
     assert txlog_read(spark, d).count() == 90
     v = txlog_collect_stats(spark, d, "k")
     assert all(b is not None for b in _read_manifest(d, v)["stats"].values())
+
+
+def _strip_schemas(table_dir):
+    """Rewrite every manifest of ``table_dir`` without its "schema"
+    entry — the manifests this format wrote before it had one."""
+    import json
+
+    from hbase_support_spark.sources.txlog import _manifest_path
+
+    for v in txlog_versions(table_dir):
+        with open(_manifest_path(table_dir, v)) as f:
+            m = json.load(f)
+        m.pop("schema")
+        with open(_manifest_path(table_dir, v), "w") as f:
+            json.dump(m, f)
+
+
+def _merge_read(spark, files):
+    return spark.read.option("mergeSchema", "true").parquet(*files)
+
+
+def test_first_read_after_merge_and_compact_starts_no_job(spark, sf_dir, table):
+    """Every commit records its version's schema, so the first read of
+    the version a merge or a compact just committed starts no job."""
+    from hbase_support_spark.sources.txlog import _read_manifest, txlog_compact
+
+    orders = load_table(spark, sf_dir, "orders")
+    txlog_merge(spark, table, orders.limit(3), "o_orderkey")
+    _, after_merge = _jobs_during(
+        spark, "txlog-after-merge", lambda: txlog_read(spark, table)
+    )
+    v = txlog_compact(spark, table, target_files=2)
+    _, after_compact = _jobs_during(
+        spark, "txlog-after-compact", lambda: txlog_read(spark, table)
+    )
+    assert after_merge == 0
+    assert after_compact == 0
+    assert _read_manifest(table, v)["schema"] == _read_manifest(table, 1)["schema"]
+    assert txlog_read(spark, table).count() == orders.count()
+
+
+def test_manifest_without_schema_reads_through_merge_schema(spark, table):
+    """A manifest written without a "schema" entry still reads: through
+    mergeSchema's footer-scan job, to the same rows and schema."""
+    with_schema = txlog_read(spark, table)
+    want = sorted(with_schema.collect())
+    _strip_schemas(table)
+    legacy, jobs = _jobs_during(
+        spark, "txlog-legacy-read", lambda: txlog_read(spark, table)
+    )
+    assert jobs >= 1
+    assert legacy is not with_schema
+    assert legacy.schema == with_schema.schema
+    assert sorted(legacy.collect()) == want
+
+
+def test_small_source_merge_starts_no_footer_job(spark, sf_dir, table, tmp_path):
+    """A small-source merge reads its touched files with the manifest's
+    schema: it runs at least one job fewer (the mergeSchema footer
+    scan of the touched files) than the same merge on a table whose
+    manifests carry no schema, with both versions already read."""
+    from hbase_support_spark.sources.txlog import _read_manifest
+
+    legacy = str(tmp_path / "tx_orders_legacy")
+    orders = load_table(spark, sf_dir, "orders")
+    txlog_init(orders.repartitionByRange(8, "o_orderkey"), legacy)
+    _strip_schemas(legacy)
+    src = orders.orderBy("o_orderkey").limit(3).withColumn("o_totalprice", F.lit(1.0))
+    jobs = {}
+    for name, d in (("schema", table), ("legacy", legacy)):
+        txlog_read(spark, d).count()  # memoize the parent version
+        _, jobs[name] = _jobs_during(
+            spark,
+            f"txlog-merge-{name}",
+            lambda d=d: txlog_merge(spark, d, src, "o_orderkey"),
+        )
+    assert jobs["schema"] <= jobs["legacy"] - 1, jobs
+    # the legacy table's commit records a schema: the next read is free
+    assert "schema" in _read_manifest(legacy, 2)
+    assert sorted(txlog_read(spark, legacy).collect()) == sorted(
+        txlog_read(spark, table).collect()
+    )
+
+
+def test_read_schema_matches_merge_schema_after_widening(spark, sf_dir, table):
+    """After a widening merge the manifest schema reads exactly as
+    mergeSchema would: same columns, order, types and nullability,
+    and nulls in the new column for rows of the old files."""
+    from hbase_support_spark.sources.txlog import _read_manifest
+
+    orders = load_table(spark, sf_dir, "orders")
+    some = [r[0] for r in orders.select("o_orderkey").limit(4).collect()]
+    src = orders.filter(F.col("o_orderkey").isin(some)).select(
+        F.lit(0.15).alias("discount"), *orders.columns
+    )  # the new column first: the version keeps the table's order
+    txlog_merge(spark, table, src, "o_orderkey")
+    cur = txlog_read(spark, table)
+    want = _merge_read(spark, _read_manifest(table, 2)["files"])
+    assert cur.schema == want.schema
+    assert cur.columns == orders.columns + ["discount"]
+    assert cur.filter(F.col("discount").isNull()).count() == orders.count() - 4
+    assert sorted(cur.collect()) == sorted(want.collect())
+
+
+def test_read_schema_matches_merge_schema_for_nested_types(spark, tmp_path):
+    """Arrays, maps, structs, decimals and timestamps read with the
+    manifest schema exactly as with mergeSchema — nullability
+    included — also after a merge widens a nested struct."""
+    from hbase_support_spark.sources.txlog import _read_manifest
+
+    d = str(tmp_path / "nested")
+    base = spark.sql(
+        """SELECT id AS k, array(id, id + 1) AS arr,
+                  map('w', CAST(id AS DOUBLE)) AS m,
+                  named_struct('x', id, 'tags', array(named_struct('t', 'a'))) AS s,
+                  CAST(id / 7 AS DECIMAL(12, 3)) AS dec,
+                  TIMESTAMP '2024-01-02 03:04:05' + make_interval(0, 0, 0, 0, 0, id) AS ts
+           FROM range(20)"""
+    )
+    txlog_init(base.repartition(3), d)
+    cur = txlog_read(spark, d)
+    assert cur.schema == _merge_read(spark, _read_manifest(d, 1)["files"]).schema
+    src = base.filter("k < 2").withColumn(
+        "s", F.struct(F.col("s.x"), F.col("s.tags"), F.lit("new").alias("y"))
+    )
+    txlog_merge(spark, d, src, "k")
+    cur = txlog_read(spark, d)
+    want = _merge_read(spark, _read_manifest(d, 2)["files"])
+    assert cur.schema == want.schema
+    assert cur.schema["s"].dataType.fieldNames() == ["x", "tags", "y"]
+    assert sorted(cur.collect()) == sorted(want.collect())
+
+
+def test_zero_row_commit_reads_back_empty(spark, tmp_path):
+    """A commit of zero rows reads back as an empty frame of its
+    schema, with no job to resolve it."""
+    d = str(tmp_path / "empty")
+    empty = spark.range(0).select(F.col("id").alias("k"), F.lit("v").alias("v"))
+    txlog_init(empty, d)
+    got, jobs = _jobs_during(spark, "txlog-empty-read", lambda: txlog_read(spark, d))
+    assert jobs == 0
+    assert got.columns == ["k", "v"]
+    assert [f.dataType.simpleString() for f in got.schema] == ["bigint", "string"]
+    assert got.count() == 0
+    txlog_merge(spark, d, empty, "k")
+    assert txlog_read(spark, d).count() == 0
+    assert txlog_read(spark, d).schema == got.schema
