@@ -59,18 +59,18 @@ class Table:
         return self.df.filter(F.col(self.key) == F.lit(rowkey))
 
     def multi_get(self, rowkeys: list) -> DataFrame:
-        """``Table.get(List<Get>)`` — batched lookup as a semi-join
-        against a LocalRelation of the keys, typed as the table's key
-        column: no Python worker runs, and its exact size lets the
-        planner broadcast it without a hint, so the probe never
-        shuffles the table. Absent, duplicate and null keys match
-        nothing extra."""
+        """``Table.get(List<Get>)`` — batched lookup as a broadcast
+        semi-join against a LocalRelation of the keys, cast to the
+        table's key-column type (`io.local_frame`): no Python worker
+        runs, and the probe never shuffles the table, whatever the
+        session's broadcast threshold. Absent, duplicate and null keys
+        match nothing extra."""
         probe = local_frame(
             self.df.sparkSession,
             [(k,) for k in rowkeys],
             StructType([self.df.schema[self.key]]),
         )
-        return self.df.join(probe, self.key, "left_semi")
+        return self.df.join(F.broadcast(probe), self.key, "left_semi")  # bcast: keys
 
     def scan(
         self,

@@ -136,10 +136,13 @@ def local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
     DataFrame that plans as ``LocalTableScan``. The rows go over as
     one ``pyarrow.Table``: ``createDataFrame`` on a Python list plans
     as ``Scan ExistingRDD`` instead, and every action on it starts
-    Python workers to convert the rows. An empty ``rows`` gives an
-    empty frame of ``schema``. Timestamps travel as Arrow UTC
-    instants, so pass aware datetimes (the engine's session zone is
-    UTC)."""
+    Python workers to convert the rows. Each column is built from
+    the values as given and cast to its field's Arrow type, so a
+    value the cast converts losslessly (``"42"`` or ``42.0`` for a
+    bigint) is accepted and one it cannot (``1.5`` for a bigint)
+    raises ``ArrowInvalid``. An empty ``rows`` gives an empty frame
+    of ``schema``. Naive datetimes are taken as UTC (the engine's
+    session zone)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -147,7 +150,7 @@ def local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
     cols = list(zip(*rows)) or [()] * len(arrow)
     return spark.createDataFrame(
         pa.Table.from_arrays(
-            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+            [pa.array(c).cast(f.type) for c, f in zip(cols, arrow)], schema=arrow
         )
     )
 

@@ -51,14 +51,10 @@ def _read_assignments(
     schema ``ivf_build`` recorded beside them, the way a txlog manifest
     carries its version's schema: no inference job, and an index of
     zero vectors — no ``cell_id=`` directories at all — reads as an
-    empty frame instead of failing inference. An index built without
-    the record (a local file, like txlog's manifests) is inferred."""
-    reader = spark.read
-    sidecar = os.path.join(index_dir, _SCHEMA_FILE)
-    if os.path.exists(sidecar):
-        with open(sidecar) as f:
-            reader = reader.schema(StructType.fromJson(json.load(f)))
-    return reader.parquet(path or f"{index_dir}/assignments")
+    empty frame instead of failing inference."""
+    with open(os.path.join(index_dir, _SCHEMA_FILE)) as f:
+        schema = StructType.fromJson(json.load(f))
+    return spark.read.schema(schema).parquet(path or f"{index_dir}/assignments")
 
 
 def _dot(a, b):

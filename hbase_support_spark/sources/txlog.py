@@ -28,7 +28,7 @@ Parquet + an atomic-exclusive publish — both available on any storage):
     mergeSchema (a footer-scan job) and needs no migration; the next
     commit on it writes one.
   * Each version's relation is still resolved once per session:
-    `_read_files` memoizes the DataFrame on (session, file tuple,
+    `_read_version` memoizes the DataFrame on (session, file tuple,
     schema), a bounded LRU, so repeat Gets/Scans of a version and the
     next MERGE's touched-file scan of it skip even the JVM-side
     relation build. The key needs no invalidation — every commit
@@ -179,7 +179,7 @@ def _schema_of(spark: SparkSession, manifest: dict) -> dict:
     """A version's schema: its manifest's, or for a manifest written
     without one, the (memoized) mergeSchema read's."""
     return manifest.get("schema") or _nullable(
-        _read_files(spark, manifest["files"]).schema.jsonValue()
+        _read_version(spark, manifest).schema.jsonValue()
     )
 
 
@@ -214,11 +214,11 @@ def _resolve(
     return reader.schema(StructType.fromJson(json.loads(schema))).parquet(*files)
 
 
-def _read_files(
-    spark: SparkSession, files: list[str], schema: dict | None = None
+def _read_version(
+    spark: SparkSession, manifest: dict, files: list[str] | None = None
 ) -> DataFrame:
-    """Read part of a version's file list with the version's
-    ``schema`` (its manifest's) — after a schema-widening merge the
+    """Read ``files`` of a version (all of them by default) with the
+    schema its manifest records — after a schema-widening merge the
     list mixes pre- and post-widening files, and a plain read would
     take an arbitrary file's schema and silently drop the widened
     column. A subset (merge's touched files, a pruned scan) reads with
@@ -227,7 +227,8 @@ def _read_files(
     scan, stats, scan, CDC) comes through here.
 
     With a schema the read starts no Spark job. Without one (a
-    manifest written before manifests carried schemas) it infers with
+    manifest written before manifests carried schemas, like those of
+    tests/fixtures/txlog_pre_schema) it infers with
     mergeSchema, which runs a job that reads every file's footer: the
     first read after each commit paid one, each merge one more for
     its new touched-file tuple, and each compaction one. Traced
@@ -262,17 +263,11 @@ def _read_files(
     20 s, 10 pairs, seeds 41-50, 4 vCPUs: op_p50_ms fell only 18.8%
     (234 to 190 ms), against 27.6% and 23.6% for this memo in the
     next two 10-pair sets on the same host (seeds 51-70)."""
-    key = json.dumps(schema) if schema else None
-    return _resolve(_Session(spark), tuple(files), key)
-
-
-def _read_version(
-    spark: SparkSession, manifest: dict, files: list[str] | None = None
-) -> DataFrame:
-    """``files`` of a version (all of them by default), read with the
-    version's schema."""
-    return _read_files(
-        spark, manifest["files"] if files is None else files, manifest.get("schema")
+    schema = manifest.get("schema")
+    return _resolve(
+        _Session(spark),
+        tuple(manifest["files"] if files is None else files),
+        json.dumps(schema) if schema else None,
     )
 
 
@@ -310,7 +305,7 @@ def txlog_read(
 ) -> DataFrame:
     """Read a pinned version (time travel) or the latest, with the
     schema its manifest records. Repeat reads of a version reuse its
-    memoized relation (`_read_files`)."""
+    memoized relation (`_read_version`)."""
     versions = txlog_versions(table_dir)
     if not versions:
         raise FileNotFoundError(f"no txlog at {table_dir}")

@@ -111,14 +111,15 @@ def test_load_table_survives_missing_spark_context(spark, sf_dir):
 
     df = load_table(NoCtx(spark), sf_dir, "nation")
     assert df.count() == 25
-    # and a second call doesn't blow up on the (skipped) memo either
+    # and a second call is a memo hit (keyed by `io.session_key`)
     assert load_table(NoCtx(spark), sf_dir, "nation").count() == 25
 
 
 def test_txlog_survives_missing_spark_context(spark, tmp_path):
-    """The txlog read memo is keyed on the session object and never
+    """The txlog read memo is keyed by `io.session_key` and never
     touches sparkContext, so a session whose sparkContext raises
-    reads, re-reads (memo hit) and merges like any other."""
+    reads, re-reads (a memo hit on the second call) and merges like
+    any other."""
     from hbase_support_spark.sources.txlog import txlog_init, txlog_merge, txlog_read
 
     class NoCtx:

@@ -398,23 +398,23 @@ def test_repeat_read_of_a_version_starts_no_job(spark, table):
 def test_memo_is_bounded_lru(spark, table):
     from hbase_support_spark.sources.txlog import (
         _READ_MEMO_SIZE,
-        _read_files,
         _read_manifest,
+        _read_version,
         _resolve,
     )
 
     manifest = _read_manifest(table, 1)
-    files, schema = manifest["files"], manifest["schema"]
+    files = manifest["files"]
     lists = [files[i : i + w] for w in (1, 2, 3) for i in range(len(files) - w + 1)]
     assert len(lists) > _READ_MEMO_SIZE
     for fl in lists:
-        _read_files(spark, fl, schema)
+        _read_version(spark, manifest, fl)
         assert _resolve.cache_info().currsize <= _READ_MEMO_SIZE
     assert _resolve.cache_info().currsize == _READ_MEMO_SIZE
     before = _resolve.cache_info()
-    _read_files(spark, lists[-1], schema)
+    _read_version(spark, manifest, lists[-1])
     after_newest = _resolve.cache_info()
-    _read_files(spark, lists[0], schema)
+    _read_version(spark, manifest, lists[0])
     after_oldest = _resolve.cache_info()
     # the newest is still memoized; the oldest was evicted, resolved again
     assert (after_newest.hits, after_newest.misses) == (before.hits + 1, before.misses)
@@ -472,7 +472,8 @@ def test_file_matching_survives_uri_escaped_table_paths(spark, tmp_path):
 
 def _strip_schemas(table_dir):
     """Rewrite every manifest of ``table_dir`` without its "schema"
-    entry — the manifests this format wrote before it had one."""
+    entry — the manifests this format wrote before it had one (the
+    keys of tests/fixtures/txlog_pre_schema's)."""
     import json
 
     from hbase_support_spark.sources.txlog import _manifest_path
@@ -481,6 +482,7 @@ def _strip_schemas(table_dir):
         with open(_manifest_path(table_dir, v)) as f:
             m = json.load(f)
         m.pop("schema")
+        assert set(m) == _PRE_SCHEMA_KEYS
         with open(_manifest_path(table_dir, v), "w") as f:
             json.dump(m, f)
 
@@ -509,19 +511,50 @@ def test_first_read_after_merge_and_compact_starts_no_job(spark, sf_dir, table):
     assert txlog_read(spark, table).count() == orders.count()
 
 
-def test_manifest_without_schema_reads_through_merge_schema(spark, table):
-    """A manifest written without a "schema" entry still reads: through
-    mergeSchema's footer-scan job, to the same rows and schema."""
-    with_schema = txlog_read(spark, table)
-    want = sorted(with_schema.collect())
-    _strip_schemas(table)
-    legacy, jobs = _jobs_during(
-        spark, "txlog-legacy-read", lambda: txlog_read(spark, table)
-    )
+def _pre_schema_table(tmp_path):
+    """A copy of tests/fixtures/txlog_pre_schema — a table the txlog
+    wrote before manifests carried a schema — with its manifests'
+    ``@TABLE_DIR@`` path prefix pointed at the copy."""
+    import shutil
+    from pathlib import Path
+
+    src = Path(__file__).parent / "fixtures" / "txlog_pre_schema"
+    d = tmp_path / "pre_schema"
+    shutil.copytree(src, d, ignore=shutil.ignore_patterns("README.md"))
+    for m in (d / "_txlog").glob("*.json"):
+        m.write_text(m.read_text().replace("@TABLE_DIR@", str(d)))
+    return str(d)
+
+
+_PRE_SCHEMA_KEYS = {"version", "parent", "op", "files"}
+
+
+def test_pre_schema_table_reads_through_merge_schema(spark, tmp_path):
+    """A table whose manifests carry no "schema" entry still reads,
+    through mergeSchema's footer-scan job: v2 mixes a v1 file without
+    the merge's new column ``w`` and files with it, and reads with
+    ``w`` null for the old rows; time travel to v1 has no ``w``. The
+    next commit records a schema, and the read after it starts no
+    job."""
+    from hbase_support_spark.sources.txlog import _nullable, _read_manifest
+
+    d = _pre_schema_table(tmp_path)
+    assert all(set(_read_manifest(d, v)) == _PRE_SCHEMA_KEYS for v in (1, 2))
+    cur, jobs = _jobs_during(spark, "txlog-legacy-read", lambda: txlog_read(spark, d))
     assert jobs >= 1
-    assert legacy is not with_schema
-    assert legacy.schema == with_schema.schema
-    assert sorted(legacy.collect()) == want
+    assert cur.schema.simpleString() == "struct<k:bigint,v:string,w:double>"
+    want = [(k, f"v{k}", None) for k in range(8)] + [(10, "n10", 1.5)]
+    want[1] = (1, "u1", 0.5)
+    assert sorted(tuple(r) for r in cur.collect()) == want
+    assert txlog_read(spark, d, version=1).columns == ["k", "v"]
+    src = spark.createDataFrame([(2, "u2", 2.5)], "k bigint, v string, w double")
+    v = txlog_merge(spark, d, src, "k")
+    assert _read_manifest(d, v)["schema"] == _nullable(cur.schema.jsonValue())
+    after, jobs = _jobs_during(spark, "txlog-legacy-next", lambda: txlog_read(spark, d))
+    assert jobs == 0
+    assert after.schema == cur.schema
+    want[2] = (2, "u2", 2.5)
+    assert sorted(tuple(r) for r in after.collect()) == want
 
 
 def test_small_source_merge_starts_no_footer_job(spark, sf_dir, table, tmp_path):
