@@ -129,8 +129,11 @@ def nopush(col: Column) -> Column:
     re-inlining the staged ``array_intersect``/dot-product subtree —
     the whole expression then evaluates once in the (pushed) Filter
     and AGAIN in the output projection, ~2x the per-pair CPU of the
-    blocked dedup family (VERDICT r12 item 3;
-    plans/r12/dedup_near_minhash_after.txt ~line 211).
+    blocked dedup family (VERDICT r12 item 3). PLANS.md counts each
+    query's ``array_intersect`` and ``aggregate(`` fold sites, so a
+    barrier that stops holding (removed, or a Spark upgrade that
+    pushes through ``shuffle``) fails
+    tests/test_plans.py::test_plans_md_is_the_plan_fingerprint.
 
     Wrap the SCORE column, not the filter: the barrier survives
     column pruning (it IS the output) and costs one 1-element array

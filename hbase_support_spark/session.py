@@ -45,6 +45,9 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # the stage progress bar writes to stderr without a newline; in
+        # a merged log it lands in front of the next PASS/FAIL line
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = builder.getOrCreate()

@@ -59,6 +59,16 @@ def sf_dir():
 
 
 @pytest.fixture(scope="session")
+def captures(spark, sf_dir):
+    """Every registry-wide static audit reads its query's DataFrame,
+    plans and kernel feeds from here; each query is built at most once
+    per session (``captures.builds`` counts the builds)."""
+    from hbase_support_spark.plans.explain import PlanCaptures
+
+    return PlanCaptures(spark, sf_dir)
+
+
+@pytest.fixture(scope="session")
 def oracle_con(sf_dir):
     from hbase_support_spark.parity import duckdb_connect
 

@@ -41,28 +41,10 @@ from pyspark.sql import functions as F
 
 from hbase_support_spark import QUERIES, load_all
 from hbase_support_spark.io import load_table
+from hbase_support_spark.plans.explain import children, column_names, seq, streamed_side_reduced, walk
+from test_funnel_sweep import _TINY_DOMAIN  # both audits police the same columns
 
 load_all()
-
-# Mirror of test_funnel_sweep._TINY_DOMAIN (kept in lockstep — both
-# audits police the same fixture enum columns).
-_TINY_DOMAIN = {
-    "o_orderstatus",
-    "o_orderpriority",
-    "l_returnflag",
-    "l_linestatus",
-    "l_shipmode",
-    "c_mktsegment",
-    "n_name",
-    "r_name",
-    "lang",
-    "segment",
-    "event_type",
-    "arm",
-    "true_lang",
-    "half",
-    "modality",
-}
 
 # Value-buffering aggregate functions (exact percentile/median buffer
 # the group's whole value list; collect_* materialize it as the
@@ -118,67 +100,28 @@ BUFFERING_JUSTIFIED: dict[str, tuple[int, str]] = {
 _AGGS_INSPECTED = [0]
 
 
-def _children(node):
-    cs = node.children()
-    return [cs.apply(i) for i in range(cs.length())]
-
-
-def _subtree_reduces(node) -> bool:
-    """True if below this aggregate the data was already reduced
-    (grid / survivor frame). Broadcast branches are skipped — an
-    Aggregate on the tiny broadcast side of a join says nothing
-    about the probe rows the buffering aggregate would swallow."""
-    stack = [node]
-    while stack:
-        n = stack.pop()
-        nn = n.nodeName()
-        if "Aggregate" in nn or "Limit" in nn or "TakeOrdered" in nn:
-            return True
-        for c in _children(n):
-            cn = c.nodeName()
-            if "BroadcastExchange" in cn or "BroadcastQueryStage" in cn:
-                continue
-            if "ReusedExchange" in cn and "Broadcast" in c.simpleString(200):
-                continue
-            stack.append(c)
-    return False
-
-
-def _buffering_funnels(node, out):
-    nn = node.nodeName()
-    if "Aggregate" in nn:
+def _buffering_funnels(plan) -> list[str]:
+    out = []
+    for node in walk(plan):
+        nn = node.nodeName()
+        if "Aggregate" not in nn:
+            continue
         try:
-            aggs = node.aggregateExpressions()
-            exprs = [aggs.apply(i).toString() for i in range(aggs.length())]
-            grp = node.groupingExpressions()
-            gnames = [
-                grp.apply(i).toString().split("#")[0].strip().lower()
-                for i in range(grp.length())
-            ]
+            exprs = [e.toString() for e in seq(node.aggregateExpressions())]
+            gnames = column_names(node.groupingExpressions())
             _AGGS_INSPECTED[0] += 1
         except Py4JError:
             exprs, gnames = [], ["<unreadable>"]
         fns = sorted({m.group(1) for e in exprs if (m := _BUFFERING.search(e))})
         if fns and (not gnames or all(g in _TINY_DOMAIN for g in gnames)):
-            if not any(_subtree_reduces(c) for c in _children(node)):
+            if not any(streamed_side_reduced(c) for c in children(node)):
                 out.append(f"{nn}[grouping={gnames} buffering={fns}]")
-    if nn == "AdaptiveSparkPlan":
-        for m in ("initialPlan", "inputPlan", "executedPlan"):
-            try:
-                inner = getattr(node, m)()
-            except (Py4JError, AttributeError):
-                continue
-            _buffering_funnels(inner, out)
-            return out
-    for c in _children(node):
-        _buffering_funnels(c, out)
     return out
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_no_tiny_key_buffering_aggregate(name, spark, sf_dir):
-    df = QUERIES[name](spark, sf_dir)
-    bad = _buffering_funnels(df._jdf.queryExecution().executedPlan(), [])
+def test_no_tiny_key_buffering_aggregate(name, captures):
+    bad = _buffering_funnels(captures[name].executed)
     expected, why = BUFFERING_JUSTIFIED.get(name, (0, ""))
     assert len(bad) == expected, (
         f"{name}: {len(bad)} buffering aggregate(s) over tiny-domain/"
@@ -203,7 +146,7 @@ def test_buffering_audit_flags_r8_oom_shape(spark, sf_dir):
         F.percentile("l_extendedprice", 0.99).alias("p99"),
     )
     before = _AGGS_INSPECTED[0]
-    bad = _buffering_funnels(df._jdf.queryExecution().executedPlan(), [])
+    bad = _buffering_funnels(df._jdf.queryExecution().executedPlan())
     assert bad, "audit failed to flag the r8 OOM shape (no-op audit)"
     assert _AGGS_INSPECTED[0] > before, "audit inspected zero Aggregate nodes"
 
@@ -213,7 +156,7 @@ def test_buffering_audit_flags_global_collect(spark, sf_dir):
     agg_quantile_exact_global pre-r7 class — must also flag."""
     o = load_table(spark, sf_dir, "orders")
     df = o.agg(F.collect_list("o_orderkey").alias("all_keys"))
-    bad = _buffering_funnels(df._jdf.queryExecution().executedPlan(), [])
+    bad = _buffering_funnels(df._jdf.queryExecution().executedPlan())
     assert bad, "audit missed a global collect_list over raw rows"
 
 
@@ -230,7 +173,7 @@ def test_buffering_audit_not_fooled_by_broadcast_side_aggregate(spark, sf_dir):
         .groupBy("o_orderstatus")
         .agg(F.percentile("o_totalprice", 0.5).alias("p50"))
     )
-    bad = _buffering_funnels(df._jdf.queryExecution().executedPlan(), [])
+    bad = _buffering_funnels(df._jdf.queryExecution().executedPlan())
     assert bad, (
         "audit exempted a buffering aggregate because of an Aggregate "
         "on the broadcast side of its join"
@@ -250,18 +193,18 @@ def test_buffering_audit_exempts_grid_fed_percentile(spark, sf_dir):
         F.max(F.col("o_totalprice")).alias("hi"),
         F.collect_list("cnt").alias("cnts"),  # buffering, but grid-fed
     )
-    assert not _buffering_funnels(df._jdf.queryExecution().executedPlan(), [])
+    assert not _buffering_funnels(df._jdf.queryExecution().executedPlan())
 
     approx = o.groupBy("o_orderstatus").agg(
         F.percentile_approx("o_totalprice", 0.5, 10000).alias("a50")
     )
     assert not _buffering_funnels(
-        approx._jdf.queryExecution().executedPlan(), []
+        approx._jdf.queryExecution().executedPlan()
     ), "percentile_approx is a bounded sketch and must not be flagged"
 
     per_cust = o.groupBy("o_custkey").agg(
         F.percentile("o_totalprice", 0.5).alias("p50")
     )
     assert not _buffering_funnels(
-        per_cust._jdf.queryExecution().executedPlan(), []
+        per_cust._jdf.queryExecution().executedPlan()
     ), "high-cardinality group keys bound the per-group buffer"

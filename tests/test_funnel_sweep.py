@@ -27,6 +27,7 @@ from pyspark.sql import Window, functions as F
 
 from hbase_support_spark import QUERIES, load_all
 from hbase_support_spark.io import load_table
+from hbase_support_spark.plans.explain import children, column_names, streamed_side_reduced, walk
 
 load_all()
 
@@ -53,90 +54,34 @@ _TINY_DOMAIN = {
 }
 
 
-def _children(node):
-    cs = node.children()
-    return [cs.apply(i) for i in range(cs.length())]
-
-
-def _spec_names(window_node):
-    spec = window_node.partitionSpec()
-    names = []
-    for i in range(spec.length()):
-        s = spec.apply(i).toString()
-        names.append(s.split("#")[0].strip().lower())
-    return names
-
-
-def _subtree_reduces(node, coarse_width: int) -> bool:
-    """True if below this window the data was already reduced: an
-    aggregation / limit, or a finer-partitioned Window (the local
-    stage of two-phase top-k, whose partition spec is strictly
-    wider than the coarse window's).
-
-    A reducing node on the BROADCAST side of a join does not count:
-    the broadcast branch is by definition a small dimension, so an
-    Aggregate there says nothing about the streamed/probe rows the
-    window actually sorts — a raw-row probe joined to a tiny
-    aggregated broadcast must still be flagged. Broadcast branches
-    (BroadcastExchange / BroadcastQueryStage / a ReusedExchange of
-    one) are therefore skipped during the descent."""
-    stack = [node]
-    while stack:
-        n = stack.pop()
-        nn = n.nodeName()
-        if "Aggregate" in nn or "Limit" in nn or "TakeOrdered" in nn:
-            return True
-        if nn == "Window":
-            try:
-                if n.partitionSpec().length() > coarse_width:
-                    return True
-            except Py4JError:
-                pass
-        for c in _children(n):
-            cn = c.nodeName()
-            if "BroadcastExchange" in cn or "BroadcastQueryStage" in cn:
-                continue
-            if "ReusedExchange" in cn and "Broadcast" in c.simpleString(200):
-                continue
-            stack.append(c)
-    return False
-
-
 # Count of Window nodes whose partition spec the sweep successfully
 # read — the no-op guard: if a PySpark API change made every
 # accessor throw, the audit would silently pass on zero inspections.
 _WINDOWS_INSPECTED = [0]
 
 
-def _tiny_key_funnels(node, out):
-    name = node.nodeName()
-    if name == "Window":
+def _tiny_key_funnels(plan) -> list[str]:
+    """Windows keyed only by tiny-domain columns whose streamed input
+    was not reduced below them: no aggregate / limit / top-k, and no
+    finer-partitioned Window (the local stage of two-phase top-k)."""
+    out = []
+    for node in walk(plan):
+        if node.nodeName() != "Window":
+            continue
         try:
-            names = _spec_names(node)
+            names = column_names(node.partitionSpec())
             _WINDOWS_INSPECTED[0] += 1
         except Py4JError:
             names = []
         if names and all(n in _TINY_DOMAIN for n in names):
-            if not any(_subtree_reduces(c, len(names)) for c in _children(node)):
+            if not any(streamed_side_reduced(c, len(names)) for c in children(node)):
                 out.append(node.simpleString(160))
-    if name == "AdaptiveSparkPlan":
-        for m in ("initialPlan", "inputPlan", "executedPlan"):
-            try:
-                inner = getattr(node, m)()
-            except (Py4JError, AttributeError):
-                continue
-            _tiny_key_funnels(inner, out)
-            return out
-    for c in _children(node):
-        _tiny_key_funnels(c, out)
     return out
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_no_tiny_key_window_funnel(name, spark, sf_dir):
-    df = QUERIES[name](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan()
-    bad = _tiny_key_funnels(plan, [])
+def test_no_tiny_key_window_funnel(name, captures):
+    bad = _tiny_key_funnels(captures[name].executed)
     assert not bad, (
         f"{name}: Window partitioned only by tiny-domain keys over "
         f"un-reduced input (the SCALE.md funnel class): {bad}"
@@ -156,7 +101,7 @@ def test_funnel_audit_flags_known_funnel(spark, sf_dir):
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice", "o_orderkey")
     df = o.select("o_orderstatus", F.row_number().over(w).alias("rn"))
     before = _WINDOWS_INSPECTED[0]
-    bad = _tiny_key_funnels(df._jdf.queryExecution().executedPlan(), [])
+    bad = _tiny_key_funnels(df._jdf.queryExecution().executedPlan())
     assert bad, "audit failed to flag a raw-row tiny-key window (no-op audit)"
     assert _WINDOWS_INSPECTED[0] > before, "audit inspected zero Window nodes"
 
@@ -173,7 +118,7 @@ def test_funnel_audit_not_fooled_by_broadcast_side_aggregate(spark, sf_dir):
     df = o.join(dim, "o_orderstatus").select(
         "o_orderstatus", "status_n", F.row_number().over(w).alias("rn")
     )
-    bad = _tiny_key_funnels(df._jdf.queryExecution().executedPlan(), [])
+    bad = _tiny_key_funnels(df._jdf.queryExecution().executedPlan())
     assert bad, (
         "audit exempted a raw-row tiny-key window because of an "
         "Aggregate on the broadcast side of its join"
@@ -189,7 +134,7 @@ def test_funnel_audit_exempts_grid_fed_window(spark, sf_dir):
     )
     w = Window.partitionBy("o_orderstatus").orderBy("o_totalprice")
     df = grid.select("o_orderstatus", F.sum("cnt").over(w).alias("run"))
-    bad = _tiny_key_funnels(df._jdf.queryExecution().executedPlan(), [])
+    bad = _tiny_key_funnels(df._jdf.queryExecution().executedPlan())
     assert not bad, f"audit flagged a grid-fed window: {bad}"
 
 

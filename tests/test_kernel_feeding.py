@@ -54,10 +54,9 @@ from py4j.protocol import Py4JError
 
 from hbase_support_spark import QUERIES, load_all
 from hbase_support_spark.operators import ranking
+from hbase_support_spark.plans.explain import children, recording_kernel_feeds
 
 load_all()
-
-_KERNELS = ("with_global_rank", "with_global_prefix_sum", "with_global_prefix_max")
 
 # (query, kernel) -> list of justifications, ONE per raw (un-reduced)
 # feed of that kernel in that query: the per-row rank/cumulative IS
@@ -119,11 +118,6 @@ RAW_ROW_JUSTIFIED: dict[tuple[str, str], list[str]] = {
 _REDUCE = ("Aggregate", "Deduplicate", "Distinct", "Limit", "LogicalRDD")
 
 
-def _children(node):
-    cs = node.children()
-    return [cs.apply(i) for i in range(cs.length())]
-
-
 def _reduced_node(n) -> bool:
     """Scale judgment for one analyzed-plan node: True iff the frame
     it produces is reduced below fact-row scale.
@@ -144,7 +138,7 @@ def _reduced_node(n) -> bool:
         return True
     if "ResolvedHint" in nn and "broadcast" in n.simpleString(200).lower():
         return True
-    kids = _children(n)
+    kids = children(n)
     if not kids:
         return False  # leaf relation = raw scan
     if "Join" in nn:
@@ -164,31 +158,11 @@ def _is_reduced(df) -> bool:
     return _reduced_node(df._jdf.queryExecution().analyzed())
 
 
-@pytest.fixture()
-def kernel_recorder(monkeypatch):
-    """Wrap the three ranking kernels to record every input frame."""
-    recorded: list[tuple[str, object]] = []
-
-    def _wrap(name, orig):
-        def inner(df, *args, **kwargs):
-            recorded.append((name, df))
-            return orig(df, *args, **kwargs)
-
-        return inner
-
-    for k in _KERNELS:
-        monkeypatch.setattr(ranking, k, _wrap(k, getattr(ranking, k)))
-    return recorded
-
-
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_kernel_inputs_reduced_or_justified(name, spark, sf_dir, kernel_recorder):
-    try:
-        QUERIES[name](spark, sf_dir)  # plan build only — kernels fire here
-    except Py4JError:  # pragma: no cover - plan build must not flake silently
-        raise
+def test_kernel_inputs_reduced_or_justified(name, captures):
+    # the capture built the query with the kernels recorded
     observed_raw = Counter(
-        kname for kname, df in kernel_recorder if not _is_reduced(df)
+        kname for kname, df in captures[name].kernel_feeds if not _is_reduced(df)
     )
     justified = Counter(
         {k: len(v) for (q, k), v in RAW_ROW_JUSTIFIED.items() if q == name}
@@ -202,21 +176,19 @@ def test_kernel_inputs_reduced_or_justified(name, spark, sf_dir, kernel_recorder
     )
 
 
-def test_kernel_audit_positive_control(spark, sf_dir, kernel_recorder):
+def test_kernel_audit_positive_control(spark, sf_dir):
     """The audit must actually see kernel calls and flag raw feeds —
     guard against the wrapper or plan accessors silently no-opping."""
     from hbase_support_spark.io import load_table
-    from hbase_support_spark.operators.ranking import with_global_rank
 
     o = load_table(spark, sf_dir, "orders")
-    # NB: call through the module attribute so the monkeypatch records it
-    ranking.with_global_rank(o, ["o_orderkey"], "r")
-    assert kernel_recorder, "recorder saw no kernel call"
-    kname, df = kernel_recorder[-1]
-    assert not _is_reduced(df), "raw orders scan must read as un-reduced"
+    with recording_kernel_feeds() as fed:
+        # NB: operators reach the kernels through the module attribute
+        ranking.with_global_rank(o, ["o_orderkey"], "r")
+    assert fed, "recorder saw no kernel call"
+    assert not _is_reduced(fed[-1][1]), "raw orders scan must read as un-reduced"
     grid = o.groupBy("o_orderstatus").agg({"*": "count"})
     assert _is_reduced(grid), "an Aggregate grid must read as reduced"
-    assert with_global_rank is not None
 
 
 def test_kernel_audit_join_blindspot_canaries(spark, sf_dir):

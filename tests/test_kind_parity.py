@@ -5,14 +5,12 @@ Round-2 regression class: the driver's value-hash distinguishes numeric
 kinds (DuckDB ``SUM(int)``→HUGEINT vs Spark BIGINT, ``epoch()``→DOUBLE
 vs BIGINT, ``sign()``→TINYINT vs DOUBLE) while ``fetchall``-based value
 comparison collapses them — 4 driver failures and 15 latent ones in r02
-were invisible to the local sweep. This test builds and plans every
-registered query/oracle pair, without running the query's own action,
-and fails on any kind divergence, so the class cannot recur —
-including after the fixtures are regenerated, which has already
-changed parquet types once (io.py load_table docstring). Building is
-not free: about two dozen operator and source sites run Spark actions
-(collect, head, count, an eager localCheckpoint) while their DataFrame
-is built (ROADMAP §2).
+were invisible to the local sweep. This test reads every
+registered query's schema from the session's plan capture (the
+query's own action never runs) and fails on any kind divergence
+against its oracle, so the class cannot recur — including after the
+fixtures are regenerated, which has already changed parquet types
+once (io.py load_table docstring).
 """
 
 from __future__ import annotations
@@ -23,13 +21,12 @@ from hbase_support_spark import QUERIES, ORACLES
 from hbase_support_spark.parity import duck_kind, kind_mismatches, spark_kind
 
 
-def test_kind_audit_registry_wide(spark, sf_dir, oracle_con):
+def test_kind_audit_registry_wide(captures, oracle_con):
     bad = {}
-    for name, fn in QUERIES.items():
+    for name in QUERIES:
         if name not in ORACLES:
             continue
-        df = fn(spark, sf_dir)
-        mism = kind_mismatches(df.dtypes, ORACLES[name], oracle_con)
+        mism = kind_mismatches(captures[name].df.dtypes, ORACLES[name], oracle_con)
         if mism:
             bad[name] = mism
     assert not bad, f"kind divergence in {len(bad)} queries: {bad}"

@@ -9,6 +9,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from hbase_support_spark.io import load_table
+from hbase_support_spark.plans.explain import jobs_during
 from hbase_support_spark.merge import check_and_put, merge_into_parquet
 
 
@@ -91,17 +92,13 @@ def test_merge_stats_ride_the_write_pass(spark, sf_dir, tmp_path):
         [(k, 1.0, "BUILDING") for k in keys],
         "c_custkey long, c_acctbal double, c_mktsegment string",
     )
-    sc = spark.sparkContext
-    sc.setJobGroup("merge-single-pass", "merge stats single pass")
-    try:
-        stats = merge_into_parquet(
-            spark, target, source, ["c_custkey"], "c_mktsegment"
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    stats, jobs = jobs_during(
+        spark,
+        "merge-single-pass",
+        lambda: merge_into_parquet(spark, target, source, ["c_custkey"], "c_mktsegment"),
+    )
     assert stats["updated"] == 2 and stats["inserted"] == 0
-    jobs = sc.statusTracker().getJobIdsForGroup("merge-single-pass")
-    assert 0 < len(jobs) <= 10, f"merge ran {len(jobs)} jobs - double evaluation?"
+    assert 0 < jobs <= 10, f"merge ran {jobs} jobs - double evaluation?"
 
 
 def test_check_and_put_cas_condition(spark, sf_dir, tmp_path):

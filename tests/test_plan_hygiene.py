@@ -1,26 +1,22 @@
 """Plan hygiene over the ENTIRE registry: no accidental cartesian
 products and no row-at-a-time Python evaluation anywhere (SURVEY.md
 §4 — UDFs must be Arrow-batched). Analysis-only: plans are inspected
-without executing, so this sweeps all queries in seconds."""
+without executing, read from the session's plan capture (each query is
+built once for every static audit)."""
 
 from __future__ import annotations
 
 import pytest
 
 from hbase_support_spark import QUERIES, load_all
-from hbase_support_spark.plans.explain import formatted_plan
+from hbase_support_spark.plans.explain import is_reducer, walk
 
 load_all()
 
-# queries whose *physical* plan legitimately contains a broadcast
-# nested loop (tiny literal side) — never a CartesianProduct though
-_THETA = {"join_range_theta"}
-
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_no_cartesian_no_row_python(name, spark, sf_dir):
-    df = QUERIES[name](spark, sf_dir)
-    plan = formatted_plan(df)
+def test_no_cartesian_no_row_python(name, captures):
+    plan = captures[name].formatted
     assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
     # BatchEvalPython = row-at-a-time Python UDF; Arrow paths show
     # ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas instead
@@ -40,46 +36,21 @@ def test_no_cartesian_no_row_python(name, spark, sf_dir):
 # operators/ranking.py instead.
 
 
-def _children(node):
-    cs = node.children()
-    return [cs.apply(i) for i in range(cs.length())]
-
-
-def _subtree_has_aggregate(node) -> bool:
-    stack = [node]
-    while stack:
-        n = stack.pop()
-        nn = n.nodeName()
-        if "Aggregate" in nn or "Limit" in nn or "TakeOrdered" in nn:
-            return True
-        stack.extend(_children(n))
-    return False
-
-
-def _bad_global_windows(node, out):
-    name = node.nodeName()
-    if name == "Window":
+def _bad_global_windows(plan) -> list[str]:
+    bad = []
+    for node in walk(plan):
+        if node.nodeName() != "Window":
+            continue
         try:
             unpartitioned = node.partitionSpec().isEmpty()
         except Exception:
             unpartitioned = False
-        if unpartitioned and not _subtree_has_aggregate(node):
-            out.append(node.simpleString(120))
-    if name == "AdaptiveSparkPlan":
-        for m in ("initialPlan", "inputPlan", "executedPlan"):
-            try:
-                _bad_global_windows(getattr(node, m)(), out)
-                return out
-            except Exception:
-                continue
-    for c in _children(node):
-        _bad_global_windows(c, out)
-    return out
+        if unpartitioned and not any(is_reducer(n) for n in walk(node)):
+            bad.append(node.simpleString(120))
+    return bad
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_no_global_window_over_raw_data(name, spark, sf_dir):
-    df = QUERIES[name](spark, sf_dir)
-    plan = df._jdf.queryExecution().executedPlan()
-    bad = _bad_global_windows(plan, [])
+def test_no_global_window_over_raw_data(name, captures):
+    bad = _bad_global_windows(captures[name].executed)
     assert not bad, f"{name}: unpartitioned Window over un-aggregated input: {bad}"

@@ -129,9 +129,11 @@ def test_parity_sweep_survives_a_missing_fixture(spark, sf_dir, tmp_path, capsys
 def test_queries_survive_empty_fixtures(spark, sf_dir, tmp_path):
     """One representative per operator family runs against zero-row
     fixtures without crashing (empty partitions, array_min of
-    nothing, 0/0 cases). A full 182-query empty sweep found exactly
-    one crash (index schema inference — fixed in sources/indexes.py);
-    this subset keeps the property pinned cheaply."""
+    nothing, 0/0 cases). An early full-registry empty sweep, when the
+    registry held 182 queries, found one crash (index schema
+    inference — fixed in sources/indexes.py); this subset keeps the
+    property pinned cheaply until ROADMAP §3 sweeps the whole
+    registry."""
     from hbase_support_spark import QUERIES, load_all
     from hbase_support_spark.io import TABLES, load_table
 

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hbase_support_spark.io import load_table
+from hbase_support_spark.plans.explain import jobs_during
 from hbase_support_spark.sources.txlog import (
     ConcurrentWriteError,
     txlog_delete,
@@ -367,26 +368,15 @@ def test_txlog_changes_preimages_carry_v1_values(spark, sf_dir, table):
         assert post[k] == round(want[k] + 1000.0, 2)
 
 
-def _jobs_during(spark, group, fn):
-    """Run ``fn`` under a fresh job group; return (result, job count)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_repeat_read_of_a_version_starts_no_job(spark, table):
     """A version whose manifest carries its schema resolves without a
     Spark job, even on its first read; a second read of the same
     version is a memo hit, returns the same DataFrame, and starts no
     job either."""
-    first, jobs_first = _jobs_during(
+    first, jobs_first = jobs_during(
         spark, "txlog-memo-first", lambda: txlog_read(spark, table)
     )
-    second, jobs_second = _jobs_during(
+    second, jobs_second = jobs_during(
         spark, "txlog-memo-second", lambda: txlog_read(spark, table, version=1)
     )
     assert jobs_first == 0
@@ -498,11 +488,11 @@ def test_first_read_after_merge_and_compact_starts_no_job(spark, sf_dir, table):
 
     orders = load_table(spark, sf_dir, "orders")
     txlog_merge(spark, table, orders.limit(3), "o_orderkey")
-    _, after_merge = _jobs_during(
+    _, after_merge = jobs_during(
         spark, "txlog-after-merge", lambda: txlog_read(spark, table)
     )
     v = txlog_compact(spark, table, target_files=2)
-    _, after_compact = _jobs_during(
+    _, after_compact = jobs_during(
         spark, "txlog-after-compact", lambda: txlog_read(spark, table)
     )
     assert after_merge == 0
@@ -540,7 +530,7 @@ def test_pre_schema_table_reads_through_merge_schema(spark, tmp_path):
 
     d = _pre_schema_table(tmp_path)
     assert all(set(_read_manifest(d, v)) == _PRE_SCHEMA_KEYS for v in (1, 2))
-    cur, jobs = _jobs_during(spark, "txlog-legacy-read", lambda: txlog_read(spark, d))
+    cur, jobs = jobs_during(spark, "txlog-legacy-read", lambda: txlog_read(spark, d))
     assert jobs >= 1
     assert cur.schema.simpleString() == "struct<k:bigint,v:string,w:double>"
     want = [(k, f"v{k}", None) for k in range(8)] + [(10, "n10", 1.5)]
@@ -550,7 +540,7 @@ def test_pre_schema_table_reads_through_merge_schema(spark, tmp_path):
     src = spark.createDataFrame([(2, "u2", 2.5)], "k bigint, v string, w double")
     v = txlog_merge(spark, d, src, "k")
     assert _read_manifest(d, v)["schema"] == _nullable(cur.schema.jsonValue())
-    after, jobs = _jobs_during(spark, "txlog-legacy-next", lambda: txlog_read(spark, d))
+    after, jobs = jobs_during(spark, "txlog-legacy-next", lambda: txlog_read(spark, d))
     assert jobs == 0
     assert after.schema == cur.schema
     want[2] = (2, "u2", 2.5)
@@ -572,7 +562,7 @@ def test_small_source_merge_starts_no_footer_job(spark, sf_dir, table, tmp_path)
     jobs = {}
     for name, d in (("schema", table), ("legacy", legacy)):
         txlog_read(spark, d).count()  # memoize the parent version
-        _, jobs[name] = _jobs_during(
+        _, jobs[name] = jobs_during(
             spark,
             f"txlog-merge-{name}",
             lambda d=d: txlog_merge(spark, d, src, "o_orderkey"),
@@ -640,7 +630,7 @@ def test_zero_row_commit_reads_back_empty(spark, tmp_path):
     d = str(tmp_path / "empty")
     empty = spark.range(0).select(F.col("id").alias("k"), F.lit("v").alias("v"))
     txlog_init(empty, d)
-    got, jobs = _jobs_during(spark, "txlog-empty-read", lambda: txlog_read(spark, d))
+    got, jobs = jobs_during(spark, "txlog-empty-read", lambda: txlog_read(spark, d))
     assert jobs == 0
     assert got.columns == ["k", "v"]
     assert [f.dataType.simpleString() for f in got.schema] == ["bigint", "string"]

@@ -78,6 +78,11 @@ def test_topk_matches_full_sort(spark, sf_dir):
     assert got == full
 
 
+def test_session_hides_console_progress(spark):
+    # the stage progress bar on stderr would split merged PASS/FAIL logs
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
+
+
 def test_hbase_connector_seam_is_documented_stub(spark):
     """The HBase read/write seam must fail loudly (documented design
     stub), never silently no-op."""

@@ -1,80 +1,51 @@
-"""Generate PLANS.md: one-line physical-plan audit per registered
-query — join strategies, shuffle (Exchange) count, scan pushdown —
-from the analyzed plans at sf0.001. Evidence for the §4 design
-claims; regenerate after plan-affecting changes:
+"""Rewrite the table in PLANS.md, the per-query plan fingerprint, from
+one build of every registered query at sf0.001
+(`explain.render_plans`); the prose above the table is kept.
+tests/test_plans.py renders the same table from the suite's plan
+capture and fails on any difference, so regenerate after a
+plan-affecting change:
 
-    python tools/gen_plans.py
+    python tools/gen_plans.py           # rewrite the table
+    python tools/gen_plans.py --check   # write nothing; exit 1 if stale
+
+Both also list the queries whose DataFrame build starts Spark jobs.
 """
 
 from __future__ import annotations
 
-import re
+import os
 import sys
 
-sys.path.insert(0, ".")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from hbase_support_spark import get_spark, load_all, QUERIES
-from hbase_support_spark.plans.explain import formatted_plan
-
-FEATURES = [
-    ("BroadcastHashJoin", "bcast-hash-join"),
-    ("SortMergeJoin", "sort-merge-join"),
-    ("BroadcastNestedLoopJoin", "bcast-nl-join"),
-    ("CartesianProduct", "CARTESIAN!"),
-    ("HashAggregate", "hash-agg"),
-    ("SortAggregate", "sort-agg"),
-    ("ObjectHashAggregate", "obj-hash-agg"),
-    ("TakeOrderedAndProject", "take-ordered"),
-    ("Window", "window"),
-    ("ArrowEvalPython", "arrow-udf"),
-    ("FlatMapGroupsInPandas", "apply-in-pandas"),
-    ("MapInPandas", "map-in-pandas"),
-    ("BatchEvalPython", "ROW-PYTHON!"),
-    ("Generate", "explode"),
-]
+from hbase_support_spark.plans.explain import PlanCaptures, render_plans
 
 
-def summarize(plan: str) -> str:
-    # formatted mode = tree, blank line, then per-node details that
-    # repeat every operator name — count from the tree section only
-    tree = plan.split("\n\n", 1)[0]
-    feats = []
-    for marker, label in FEATURES:
-        n = tree.count(marker)
-        if n:
-            feats.append(label if n == 1 else f"{label}x{n}")
-    shuffles = len(re.findall(r"\bExchange\b", tree)) - tree.count("BroadcastExchange")
-    pushed = "pushdown" if re.search(r"PushedFilters: \[[^\]]", plan) else ""
-    parts = [f"shuffles={max(shuffles, 0)}"] + ([pushed] if pushed else []) + feats
-    return ", ".join(parts)
-
-
-def main() -> None:
+def main() -> int:
     load_all()
-    spark = get_spark("plans", master="local[4]", shuffle_partitions=8)
+    # the session shape of tests/conftest.py, so both render one table
+    spark = get_spark("tests", master="local[8]", shuffle_partitions=8)
     sf = "/root/testdata/sf0.001"
-    lines = [
-        "# PLANS — physical-plan audit (generated by tools/gen_plans.py)",
-        "",
-        "Per-query operator/shuffle summary from the analyzed plan at",
-        "sf0.001 (pre-AQE: runtime coalescing reduces real shuffle",
-        "partition counts further). `shuffles` counts non-broadcast",
-        "Exchange nodes. Red flags (`CARTESIAN!`, `ROW-PYTHON!`) are",
-        "asserted absent in tests/test_plan_hygiene.py.",
-        "",
-        "| query | plan summary |",
-        "|---|---|",
-    ]
-    for name in sorted(QUERIES):
-        try:
-            plan = formatted_plan(QUERIES[name](spark, sf))
-            lines.append(f"| `{name}` | {summarize(plan)} |")
-        except Exception as e:  # pragma: no cover
-            lines.append(f"| `{name}` | ERROR: {type(e).__name__} |")
-    with open("PLANS.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote PLANS.md ({len(QUERIES)} queries)")
+    captures = PlanCaptures(spark, sf)
+    table = render_plans(captures, QUERIES)
+    eager = [f"{n} ({c.build_jobs})" for n, c in sorted(captures.built.items()) if c.build_jobs]
+    print(f"{len(eager)} queries start Spark jobs while built: " + ", ".join(eager))
+    path = os.path.join(REPO, "PLANS.md")
+    with open(path, encoding="utf-8") as fh:
+        prose, head, old = fh.read().partition("| query |")
+    if head + old == table:
+        print("PLANS.md current")
+    elif "--check" in sys.argv:
+        print("PLANS.md stale (run `python tools/gen_plans.py`)")
+        return 1
+    else:
+        with open(path, "w", encoding="utf-8") as fh:
+            fh.write(prose + table)
+        print(f"PLANS.md rewritten ({len(QUERIES)} queries)")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
