@@ -60,7 +60,6 @@ def merge_into_parquet(
     Returns {"touched_partitions": n, "updated": n, "inserted": n}.
     """
     ensure_confs(spark)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     # Touched partitions = where matched keys currently live (found by
     # a key+partition column-pruned scan — the same "find touched
@@ -120,10 +119,13 @@ def merge_into_parquet(
         F.sum(F.col("_inserted").cast("long")).alias("i"),
     )
     # Dynamic overwrite replaces only partition dirs present in the
-    # output — exactly the touched set, by construction.
-    observed.drop("_updated", "_inserted").write.mode("overwrite").partitionBy(
-        partition_col
-    ).parquet(target_path)
+    # output — exactly the touched set, by construction. It is a
+    # writer option, not a session conf: set on the session it would
+    # turn every later partitioned overwrite there dynamic, and a sink
+    # rewritten with fewer partitions would keep stale ones.
+    observed.drop("_updated", "_inserted").write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(partition_col).parquet(target_path)
     counts = obs.get
     return {
         "touched_partitions": len(touched),
@@ -191,7 +193,6 @@ def bulk_delete(
     read as empty; without it the schema is inferred.
     """
     ensure_confs(spark)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     reader = spark.read if schema is None else spark.read.schema(schema)
     full = reader.parquet(target_path)
     touched = [
@@ -210,6 +211,7 @@ def bulk_delete(
         # rewrite only touched partitions that still have rows
         (
             survivors.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy(partition_col)
             .parquet(target_path)
         )

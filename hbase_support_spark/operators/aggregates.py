@@ -5436,13 +5436,16 @@ def events_lead_lag_xcorr(spark, sf_dir):
         F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sx2"),
         F.sum(F.col("y") * F.col("y")).cast("bigint").alias("sy2"),
     )
+    # NULLIF: a lag whose x (or y) series is constant, e.g. one day
+    # of data, has a zero denominator; DuckDB yields NULL there while
+    # Spark's ANSI mode throws DIVIDE_BY_ZERO (thin drill)
     r = """
         ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE))
          - (CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)))
-        / (SQRT((CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE))
-                - (CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-           * SQRT((CAST(n AS DOUBLE) * CAST(sy2 AS DOUBLE))
-                  - (CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))))
+        / NULLIF(SQRT((CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE))
+                      - (CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
+                 * SQRT((CAST(n AS DOUBLE) * CAST(sy2 AS DOUBLE))
+                        - (CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 0)
     """
     return m.select(
         F.col("lag").cast("bigint").alias("lag"),
@@ -5624,11 +5627,14 @@ def orders_discount_elasticity_ols(spark, sf_dir):
         F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
         F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sx2"),
     )
+    # NULLIF: a brand whose rows share one discount has a zero
+    # denominator; DuckDB yields NULL there while Spark's ANSI mode
+    # throws DIVIDE_BY_ZERO (thin drill)
     slope = """
         ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE))
          - (CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)))
-        / ((CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE))
-           - (CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
+        / NULLIF((CAST(n AS DOUBLE) * CAST(sx2 AS DOUBLE))
+                 - (CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 0)
     """
     return m.select(
         "p_brand", "n", "sx", "sy", "sxy", "sx2",

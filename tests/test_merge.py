@@ -69,9 +69,13 @@ def test_merge_rewrites_only_touched_partitions(spark, sf_dir, tmp_path):
         [(k, 42.0, "AUTOMOBILE")],
         "c_custkey long, c_acctbal double, c_mktsegment string",
     )
+    # the dynamic overwrite is the merge's own writer option: the
+    # session's mode stays static for every other partitioned write
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
     stats = merge_into_parquet(
         spark, target, source, ["c_custkey"], "c_mktsegment"
     )
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
     assert stats["touched_partitions"] == 1
     for p, mtime in snapshot.items():
         if "c_mktsegment=AUTOMOBILE" not in p:
@@ -264,7 +268,9 @@ def test_bulk_delete_drops_fully_emptied_partition(spark, sf_dir, tmp_path):
         (F.col("o_orderstatus") == "F") & (F.col("o_totalprice") > 300000)
     )
     doomed = orders.filter(pred).count()
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
     stats = bulk_delete(spark, target, pred, "o_orderstatus")
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
     assert stats == {
         "deleted": doomed,
         "touched_partitions": 2,

@@ -41,9 +41,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hbase_support_spark import QUERIES, get_spark, load_all
+from tools.census import restart_spark
 
 _RETRIES = 2  # attempts after the first failure
 
@@ -83,11 +84,7 @@ REPLICA_QUADRATIC = {
 }
 
 
-def _fresh_spark():
-    return get_spark(
-        "bench-sweep",
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_SHUFFLE", "8")),
-    )
+_SHUFFLE = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "8"))
 
 
 def _deterministic(err: Exception) -> bool:
@@ -112,29 +109,6 @@ def _session_alive(spark) -> bool:
         return False
 
 
-def _restart_spark(spark):
-    """Replace a dead session. If the JVM itself crashed (py4j
-    gateway gone — the GC-death case, not just a stopped context),
-    builder.getOrCreate() would hand back a corpse: reset the
-    process-level gateway handles so a brand-new JVM launches."""
-    try:
-        spark.stop()
-    except Exception:  # noqa: BLE001
-        pass
-    try:
-        return _fresh_spark()
-    except Exception:  # noqa: BLE001 — gateway dead; force relaunch
-        from pyspark import SparkContext
-        from pyspark.sql import SparkSession
-
-        SparkContext._active_spark_context = None
-        SparkContext._gateway = None
-        SparkContext._jvm = None
-        SparkSession._instantiatedSession = None
-        SparkSession._activeSession = None
-        return _fresh_spark()
-
-
 def main() -> None:
     sf_dir = (
         sys.argv[1]
@@ -143,7 +117,7 @@ def main() -> None:
     )
     names = sys.argv[2:]
     load_all()
-    spark = _fresh_spark()
+    spark = get_spark("bench-sweep", shuffle_partitions=_SHUFFLE)
     QUERIES["agg_rowcount"](spark, sf_dir).collect()  # warm
     incl = [f for f in names if not f.startswith("-")]
     excl = [f[1:] for f in names if f.startswith("-")]
@@ -199,7 +173,7 @@ def main() -> None:
                 alive = _session_alive(spark)
                 if not alive:
                     print("  spark session dead — restarting JVM bridge")
-                    spark = _restart_spark(spark)
+                    spark = restart_spark(spark, "bench-sweep", _SHUFFLE)
                     restarted = True
                 elif _deterministic(e):
                     # live session + analysis-class error: the query is

@@ -44,8 +44,9 @@ def _is_jvm_death(exc: BaseException) -> bool:
     ))
 
 
-def _restart_spark(old):
-    """Fully restart the JVM after a gateway death: py4j caches the
+def restart_spark(old, app_name: str, shuffle_partitions: int):
+    """Fully restart the JVM after a gateway death and return a fresh
+    ``get_spark(app_name, shuffle_partitions=...)``: py4j caches the
     dead gateway on SparkContext, so a plain get_spark() would try to
     reuse it and die with ConnectionRefused (observed r11)."""
     from pyspark import SparkContext
@@ -86,7 +87,7 @@ def _restart_spark(old):
     SparkSession._activeSession = None
     os.environ.pop("PYSPARK_GATEWAY_PORT", None)
     os.environ.pop("PYSPARK_GATEWAY_SECRET", None)
-    return get_spark("census", shuffle_partitions=32)
+    return get_spark(app_name, shuffle_partitions=shuffle_partitions)
 
 
 def _parse_prior(log_path: str) -> tuple[dict[str, float], list, list]:
@@ -146,7 +147,7 @@ def main() -> None:
             # at x128 eventually thrash GC (observed r11: 50+ GB heap,
             # GCLocker retries, an 8g run died outright). A periodic
             # clean restart keeps every query's timing on a fresh heap.
-            spark = _restart_spark(spark)
+            spark = restart_spark(spark, "census", 32)
             QUERIES["agg_rowcount"](spark, dst).collect()  # rewarm
         for attempt in (1, 2):
             t0 = time.perf_counter()
@@ -162,7 +163,7 @@ def main() -> None:
                 if _is_jvm_death(e):
                     jvm_died.append(name)
                     print(f"JVM-DIED {name}", flush=True)
-                    spark = _restart_spark(spark)
+                    spark = restart_spark(spark, "census", 32)
                 if attempt == 2:
                     failed.append(name)
                     print(f"FAILED {name}: {type(e).__name__}: {e}"[:300],
@@ -193,6 +194,9 @@ def main() -> None:
         fh.write("\n".join(lines) + "\n")
     print(lines[0])
     print(lines[-1])
+    # an OOM or a JVM death at scale is a failure, never noise
+    if failed or jvm_died:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

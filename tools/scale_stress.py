@@ -144,27 +144,32 @@ def build(spark, src: str, dst: str, r: int) -> None:
 
 def _replicate(spark, src, dst, r, shift, perturb) -> None:
     for t in TABLES:
-        base = load_table(spark, src, t)
+        out = load_table(spark, src, t)
         if t in shift:
-            cols = shift[t]
-            maxes = base.agg(
-                *[F.max(c).alias(c) for c in cols]
-            ).first()  # one metadata-scale row per table
-            steps = {c: int(maxes[c]) + 1 for c in cols}
-            parts = []
-            for i in range(r):
-                d = base
-                for col in cols:
-                    d = d.withColumn(col, F.col(col) + F.lit(i * steps[col]))
-                if t in perturb:
-                    d = perturb[t](d, i)
-                parts.append(d)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionAll(p)
-        else:
-            out = base
+            out = replicate(out, shift[t], r, perturb.get(t))
         out.write.mode("overwrite").parquet(f"{dst}/{t}.parquet")
+
+
+def replicate(base, cols: list[str], r: int, perturb=None):
+    """``r`` copies of one table's frame; copy i shifts each of
+    ``cols`` by i * (max + 1) and then passes through
+    ``perturb(frame, i)`` when given."""
+    maxes = base.agg(
+        *[F.max(c).alias(c) for c in cols]
+    ).first()  # one metadata-scale row per table
+    steps = {c: int(maxes[c]) + 1 for c in cols}
+    parts = []
+    for i in range(r):
+        d = base
+        for col in cols:
+            d = d.withColumn(col, F.col(col) + F.lit(i * steps[col]))
+        if perturb is not None:
+            d = perturb(d, i)
+        parts.append(d)
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionAll(p)
+    return out
 
 
 def main() -> None:

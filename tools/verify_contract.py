@@ -1,7 +1,7 @@
 """Driver-contract verification — run the graded surface exactly the
 way the per-round driver does (see .claude/skills/verify/SKILL.md).
 
-Differences from tools/run_parity.py (the fast iteration sweep):
+Differences from ``tools/drill.py none`` (the fast iteration sweep):
   * imports ``__spark_entry__`` from a NEUTRAL cwd, proving the
     contract file self-bootstraps sys.path;
   * uses a VANILLA SparkSession (no engine confs pre-set) — every
